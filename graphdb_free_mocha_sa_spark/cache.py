@@ -125,20 +125,30 @@ def publish_pointer(target: str, final_path: str) -> bool:
     open writes the bucketed store base ONCE and the quad-view artifact
     points at those same files instead of a second full write of the
     quads (r12 opt, guide §6; the r11 cold-load profile showed the quads
-    crossing disk twice, ~57 s of a 92-108 s cold open at sf0.1)."""
+    crossing disk twice, ~57 s of a 92-108 s cold open at sf0.1).
+
+    The target is stored relative to the pointer's generation dir (the
+    directory holding ``final_path``), so the pair survives a move of the
+    cache root."""
     tmp = scratch_dir(final_path)
+    gen = os.path.dirname(os.path.abspath(final_path))
     with open(os.path.join(tmp, "_POINTER"), "w") as fh:
-        fh.write(os.path.abspath(target))
+        fh.write(os.path.relpath(os.path.abspath(target), gen))
     return publish(tmp, final_path)
 
 
 def read_pointer(path: str) -> str | None:
-    """Target of a pointer artifact, or None for a plain artifact."""
+    """Target of a pointer artifact, or None for a plain artifact. Relative
+    targets resolve against the pointer's generation dir; absolute ones
+    (written before targets were relative) are returned as they are."""
     p = os.path.join(path, "_POINTER")
     try:
         if os.path.isfile(p):
             with open(p) as fh:
-                return fh.read().strip() or None
+                target = fh.read().strip()
+            if target:
+                return os.path.join(
+                    os.path.dirname(os.path.abspath(path)), target)
     except OSError:
         pass
     return None

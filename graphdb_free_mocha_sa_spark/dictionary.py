@@ -2,138 +2,88 @@
 ``owlim:entity-index-size``/``entity-id-size``, repo-config.ttl:22-23).
 
 At 100 TB, joining on 8-byte BIGINT ids instead of RDF term strings cuts
-shuffle bytes several-fold and makes sort-merge joins cache-friendly. The
-dictionary is built with one distinct pass + ``monotonically_increasing_id``
-(unique, not dense — exactly what a join key needs, no global coordination),
-and the id-encoded quad table carries the original literal shadow columns so
-range predicates still push down.
+shuffle bytes several-fold and makes sort-merge joins cache-friendly.
 
-Round-trip: ``encode_quads_ids`` → joins on ``s_id/p_id/o_id`` →
-``decode_ids`` restores term strings for result serialization.
+A term's id is a pure function of the term: :func:`term_id`, the 64-bit
+xxhash of its canonical key. The dictionary is then one scan of the quads
+and one aggregation, and encoding the quads is a projection — no join, no
+global id assignment, and the same term gets the same id in every build.
+The price is that two terms may share an id. With n distinct terms the
+chance of any shared id is about n²/2⁶⁵ (birthday bound; ~10⁻⁷ at 2·10⁶
+terms), and the build records it exactly: every dictionary row carries the
+least and greatest term under its id, and :func:`has_collision` finds any
+id with two terms. The engine sends such a snapshot to the string path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def build_term_dict(quads: DataFrame) -> DataFrame:
-    """``dict(term STRING, id BIGINT)`` over every term position.
-
-    One wide-union distinct (single shuffle); ids assigned per-partition
-    without coordination (monotonically_increasing_id), mirroring the
-    reference's entity index at unbounded capacity.
-    """
-    terms = (quads.select(F.col("s").alias("term"))
-             .unionByName(quads.select(F.col("p").alias("term")))
-             .unionByName(quads.select(F.col("g").alias("term")))
-             .unionByName(quads.where(F.col("o_dt").isNull())
-                          .select(F.col("o_lex").alias("term")))
-             .distinct())
-    return terms.withColumn("id", F.monotonically_increasing_id())
+from graphdb_free_mocha_sa_spark.model import canonical_object_key
 
 
-def encode_quads_ids(quads: DataFrame, term_dict: DataFrame) -> DataFrame:
-    """Quads with BIGINT ``g_id/s_id/p_id/o_id`` (o_id NULL for literals;
-    literal lex/shadow columns ride along untouched)."""
-    d = term_dict
-    out = quads
-    for pos in ("g", "s", "p"):
-        out = (out.join(d.select(F.col("term").alias(pos),
-                                 F.col("id").alias(f"{pos}_id")), pos))
-    o_dict = d.select(F.col("term").alias("o_lex"), F.col("id").alias("o_id"))
-    iri_o = (out.where(F.col("o_dt").isNull()).join(o_dict, "o_lex"))
-    lit_o = (out.where(F.col("o_dt").isNotNull())
-             .withColumn("o_id", F.lit(None).cast("long")))
-    return iri_o.unionByName(lit_o).drop("g", "s", "p")
+def term_id(key: Column) -> Column:
+    """BIGINT id of the term whose canonical key is ``key``."""
+    return F.xxhash64(key)
 
 
 def build_term_dict_full(quads: DataFrame) -> DataFrame:
-    """``dict(id BIGINT, term STRING, lex, dt, lang, num, ts)`` over EVERY
-    term — IRIs, bnodes, graph names AND literals (keyed by canonical term
-    key, mirroring :func:`model.canonical_object_key`).
+    """``dict(id BIGINT, term STRING, lex, dt, lang, num, ts, term_max)``
+    over EVERY term — IRIs, bnodes, graph names AND literals (keyed by
+    canonical term key, mirroring :func:`model.canonical_object_key`).
 
     This is the engine's entity index (reference: 32-bit entity ids,
     repo-config.ttl:22-23, scaled to 64-bit): the query path joins on ``id``
     and decodes back to full term families only at projection. Carrying the
     literal family columns in the dictionary makes the decode a single join.
 
-    Ids come from ``monotonically_increasing_id`` — unique, not dense, no
-    global coordination. Callers MUST materialize (localCheckpoint/cache)
-    the result before deriving encodings from it: the id assignment is not
-    stable across recomputation.
+    One scan: each quad fans out to its four position terms via ``inline``
+    (as ``encode.encode_table`` does), grouped by :func:`term_id`. ``term``
+    and its family are the least term under the id, ``term_max`` the
+    greatest; they differ only where ids collide (:func:`has_collision`).
     """
-    from graphdb_free_mocha_sa_spark.model import canonical_object_key
-    spg = None
-    for pos in ("s", "p", "g"):
-        piece = quads.select(F.col(pos).alias("term"))
-        spg = piece if spg is None else spg.unionByName(piece)
-    spg = spg.select(
-        "term", F.col("term").alias("lex"),
-        F.lit(None).cast("string").alias("dt"),
-        F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("double").alias("num"),
-        F.lit(None).cast("timestamp").alias("ts"))
-    objs = quads.select(
-        canonical_object_key().alias("term"), F.col("o_lex").alias("lex"),
-        F.col("o_dt").alias("dt"), F.col("o_lang").alias("lang"),
-        F.col("o_num").alias("num"), F.col("o_ts").alias("ts"))
-    return (spg.unionByName(objs).dropDuplicates(["term"])
-            .withColumn("id", F.monotonically_increasing_id()))
+    null = {t: F.lit(None).cast(t) for t in ("string", "double", "timestamp")}
+
+    def entry(term, lex, dt, lang, num, ts):
+        return F.struct(term.alias("term"), lex.alias("lex"), dt.alias("dt"),
+                        lang.alias("lang"), num.alias("num"), ts.alias("ts"))
+
+    entries = [entry(F.col(pos), F.col(pos), null["string"], null["string"],
+                     null["double"], null["timestamp"])
+               for pos in ("s", "p", "g")]
+    entries.append(entry(canonical_object_key(), F.col("o_lex"),
+                         F.col("o_dt"), F.col("o_lang"), F.col("o_num"),
+                         F.col("o_ts")))
+    terms = quads.select(F.inline(F.array(*entries)))
+    return (terms.groupBy(term_id(F.col("term")).alias("id"))
+            .agg(F.min(F.struct(*terms.columns)).alias("t"),
+                 F.max("term").alias("term_max"))
+            .select("id", "t.*", "term_max"))
 
 
-def encode_quads(quads: DataFrame, term_dict: DataFrame) -> DataFrame:
+def has_collision(term_dict: DataFrame) -> bool:
+    """True iff some id of :func:`build_term_dict_full` names two terms.
+    Run it on the materialized dictionary: a filtered scan collecting the
+    (almost always zero) colliding ids is one Spark job, where a global
+    aggregate or a ``limit`` would take two or more."""
+    return bool(term_dict.where(
+        ~F.col("term").eqNullSafe(F.col("term_max"))).select("id").collect())
+
+
+def encode_quads(quads: DataFrame) -> DataFrame:
     """Quad table re-keyed to BIGINT ids: ``(g_id, s_id, p_id, o_id)`` —
     every position, literals included — with the object's literal family
     (``o_lex/o_dt/o_lang/o_num/o_ts``) kept INLINE so value predicates
     (range filters, lang tags) stay pushdown-able without a dictionary join.
 
+    A projection: each id is :func:`term_id` of the position's canonical
+    key, so the result matches any dictionary built from the same quads.
     BGP joins then shuffle 8-byte longs instead of ~60-byte IRI strings
     (the reference's entity-id join design, SURVEY §1.4).
     """
-    from graphdb_free_mocha_sa_spark.model import canonical_object_key
-    d = term_dict.select("term", "id")
-    out = quads
-    # predicate and graph domains are schema-bound (dozens to thousands of
-    # distinct terms even at 100 TB): resolve their ids with a BROADCAST of
-    # the domain-filtered dictionary instead of shuffling the full quad
-    # table — only the s and o encodes need shuffle joins.
-    # Broadcast-eligibility probe: ONE map-side approx-distinct agg for
-    # both positions (r11 opt, guide §1.2) — the old per-position
-    # `distinct().count()` ran two full shuffle jobs over the quad table
-    # just to make a sizing DECISION. approx is safe here: the value only
-    # picks broadcast vs shuffle join; the encoding itself is exact either
-    # way, and a few-percent miss at the 100k boundary merely changes
-    # which join strategy carries it. Explicit 2% rsd (r11 advisor item)
-    # bounds the broadcast-size fuzz at the threshold deterministically.
-    ndv = quads.agg(
-        F.approx_count_distinct("g", 0.02).alias("g"),
-        F.approx_count_distinct("p", 0.02).alias("p")).first()
-    for pos in ("g", "p"):
-        dom = quads.select(F.col(pos).alias("term")).distinct()
-        if ndv[pos] <= 100_000:
-            sub = d.join(F.broadcast(dom), "term")
-            out = out.join(
-                F.broadcast(sub.withColumnsRenamed(
-                    {"term": pos, "id": f"{pos}_id"})), pos)
-        else:
-            out = out.join(
-                d.withColumnsRenamed({"term": pos, "id": f"{pos}_id"}), pos)
-    out = out.join(d.withColumnsRenamed({"term": "s", "id": "s_id"}), "s")
-    out = out.withColumn("__okey", canonical_object_key())
-    out = out.join(d.withColumnsRenamed({"term": "__okey", "id": "o_id"}),
-                   "__okey")
-    return out.select("g_id", "s_id", "p_id", "o_id",
-                      "o_lex", "o_dt", "o_lang", "o_num", "o_ts")
-
-
-def decode_ids(df: DataFrame, term_dict: DataFrame,
-               cols: dict[str, str]) -> DataFrame:
-    """Join term strings back for the given ``{id_col: out_col}`` mapping."""
-    out = df
-    for id_col, name in cols.items():
-        out = (out.join(term_dict.select(F.col("id").alias(id_col),
-                                         F.col("term").alias(name)),
-                        id_col, "left").drop(id_col))
-    return out
+    return quads.select(
+        term_id(F.col("g")).alias("g_id"), term_id(F.col("s")).alias("s_id"),
+        term_id(F.col("p")).alias("p_id"),
+        term_id(canonical_object_key()).alias("o_id"),
+        "o_lex", "o_dt", "o_lang", "o_num", "o_ts")

@@ -173,30 +173,28 @@ class Engine:
     def _encoded_state(self):
         """Dictionary + id-encoded quads for the CURRENT store snapshot,
         rebuilt (and the constant-id cache dropped) whenever the snapshot
-        identity changes. localCheckpoint pins the nondeterministic
-        monotonically_increasing_id assignment."""
+        identity changes, or None when two of the snapshot's terms share an
+        id (dictionary.has_collision) — that snapshot then stays on the
+        string path (``_should_encode`` answers False for it)."""
         basis = self._basis()
         if self._enc is None or self._enc[0][0] is not basis[0] \
                 or self._enc[0][1] is not basis[1]:
-            n_part = self.spark.sparkContext.defaultParallelism
             warm = self._warm_encoded_dir()
-            loaded = self._load_warm_encoded(warm, n_part) if warm else None
+            loaded = self._load_warm_encoded(warm) if warm else None
             if loaded is not None:
                 term_dict, enc = loaded
             else:
-                from graphdb_free_mocha_sa_spark.dictionary import (
-                    build_term_dict_full, encode_quads)
+                from graphdb_free_mocha_sa_spark import dictionary as D
                 quads = self._quads()
-                # One checkpointed copy per store version, physically
-                # clustered on id. (Note: localCheckpoint does NOT carry
-                # partitioning metadata into the logical plan — verified on
-                # this Spark build — so decode joins still plan their own
-                # distribution; AQE broadcasts the tiny post-join solution
-                # side. The clustering keeps checkpoint blocks compact.)
-                term_dict = (build_term_dict_full(quads)
-                             .repartition(n_part, "id")
-                             .sortWithinPartitions("id")
-                             .localCheckpoint())
+                # ids are a function of the term, so the checkpoint only
+                # saves recomputation; the dictionary comes out of its
+                # aggregation already hash-partitioned by id
+                term_dict = D.build_term_dict_full(quads).localCheckpoint()
+                if D.has_collision(term_dict):
+                    self._enc = None
+                    self._size_basis = (basis[0], False)
+                    return None
+                term_dict = term_dict.drop("term_max")
                 # (Measured at sf0.1: pre-partitioning enc by s_id — via
                 # cache() for partitioning-aware scans or checkpoint — is
                 # wash-to-worse locally; 8-byte-id exchanges are cheap at
@@ -204,12 +202,12 @@ class Engine:
                 # save. The at-scale shuffle-free layout is the bucketed
                 # catalog table, store.write_bucketed_table, with its
                 # zero-Exchange self-join proven in test_plans.)
-                enc = encode_quads(quads, term_dict).localCheckpoint()
+                enc = D.encode_quads(quads).localCheckpoint()
                 if warm:
                     self._persist_warm_encoded(warm, term_dict, enc)
                     # re-read through the just-published bucketed table so
                     # THIS session's star joins are bucket-co-located too
-                    reloaded = self._load_warm_encoded(warm, n_part)
+                    reloaded = self._load_warm_encoded(warm)
                     if reloaded is not None:
                         term_dict, enc = reloaded
             self._enc = (basis, term_dict, enc)
@@ -272,32 +270,27 @@ class Engine:
         # expansion is on — key the cache on the switch. v2 = bucketed
         # enc layout (round-5); v4 = pre-clustered write, ENC_BUCKETS files
         # per predicate dir (round-6); older dirs age out via generation
-        # pruning.
+        # pruning. The id scheme is not part of the key: a published
+        # dict+enc pair was built together, so it is self-consistent
+        # whether its ids are hashes or the older per-build sequence.
         sub = "encoded_v4" if self.use_sameas else "encoded_nosameas_v4"
         return os.path.join(self.warm_dir, sub)
 
-    def _load_warm_encoded(self, warm: str, n_part: int):
+    def _load_warm_encoded(self, warm: str):
         """dict+enc published by an earlier session: parquet scans replace
-        the build. The two artifacts are published atomically together (one
-        rename) because the id assignment only matches within one build."""
+        the build. The two artifacts are published together (one rename)
+        and only after the build's collision check passed, so the pair is
+        always a collision-free dictionary with its own encoding."""
         from graphdb_free_mocha_sa_spark import cache as C
         import os
         try:
             if not C.is_published(warm):
                 return None
-            # no re-clustering on the warm path (r11 opt): the dict files
-            # were WRITTEN from the id-repartitioned+sorted build frame, so
-            # they are already id-clustered on disk; the old repartition+
-            # sort re-shuffled the whole dictionary on every warm open, and
-            # localCheckpoint drops partitioning metadata from the plan
-            # anyway (decode joins plan their own distribution).
             term_dict = (self.spark.read.parquet(os.path.join(warm, "dict"))
                          .localCheckpoint())
             # bucketed catalog scan when the artifact carries the layout —
             # NOT localCheckpointed: checkpointing drops the bucketing
-            # metadata from the plan, and the parquet files already pin the
-            # (nondeterministic) id assignment that checkpointing pins on
-            # the cold path
+            # metadata from the plan
             enc = self._bucketed_enc_table(os.path.join(warm, "enc"))
             if enc is None:
                 enc = self.spark.read.parquet(os.path.join(warm, "enc")) \
@@ -448,8 +441,10 @@ class Engine:
 
     def _query_uncached(self, sparql: str):
         q = parse_query(sparql)
-        if self._should_encode() and not isinstance(q, A.DescribeQuery):
-            term_dict, enc_quads = self._encoded_state()
+        state = (self._encoded_state() if self._should_encode()
+                 and not isinstance(q, A.DescribeQuery) else None)
+        if state is not None:
+            term_dict, enc_quads = state
             self._prefetch_consts(q)
             tr = Translator(self.spark, enc_quads,
                             getattr(q, "dataset_default", None),

@@ -718,7 +718,8 @@ def _closure_body(spark: SparkSession, quads: DataFrame,
     # One-shot fixpoint (r12 opt): when the only rules are rdfs2/3/7/9
     # over the driver-CLOSED subclass/subprop relations — no transitive /
     # functional / restriction / inverse / symmetric / hasValue machinery,
-    # and rdf:type itself is not a subproperty source or target — every
+    # and rdf:type itself is not a subproperty source or target and has no
+    # domain or range (rdfs2/3 would fire again on derived types) — every
     # derivation normal-forms to base →(sp*) rel →(dom/rng) type →(sc*)
     # type. Pre-composing domain/range across sp* and sc* on the driver
     # makes ONE rule application complete, so the confirm iteration (a
@@ -728,7 +729,9 @@ def _closure_body(spark: SparkSession, quads: DataFrame,
     one_shot = (_driver_cone_rules_ok(schema) and not schema.inverse
                 and not schema.symmetric and not schema.has_value
                 and RDF_TYPE not in {a for a, _ in schema.subprop}
-                and RDF_TYPE not in {b for _, b in schema.subprop})
+                and RDF_TYPE not in {b for _, b in schema.subprop}
+                and RDF_TYPE not in {p for p, _ in schema.domain}
+                and RDF_TYPE not in {p for p, _ in schema.range})
     if one_shot and (schema.domain or schema.range):
         def _compose(tbl):
             # p1 ⊑* p2 fires p2's domain/range on p1-facts …

@@ -46,21 +46,21 @@ def main():
 
     # step through _encoded_state manually
     from graphdb_free_mocha_sa_spark.dictionary import (build_term_dict_full,
-                                                        encode_quads)
-    n_part = spark.sparkContext.defaultParallelism
+                                                        encode_quads,
+                                                        has_collision)
     quads = eng._quads()
     phase(spark, "_quads (sameAs view)", last)
-    term_dict = (build_term_dict_full(quads)
-                 .repartition(n_part, "id")
-                 .sortWithinPartitions("id")
-                 .localCheckpoint())
+    term_dict = build_term_dict_full(quads).localCheckpoint()
     phase(spark, "build_term_dict_full + checkpoint", last)
-    enc = encode_quads(quads, term_dict).localCheckpoint()
+    assert not has_collision(term_dict)
+    term_dict = term_dict.drop("term_max")
+    phase(spark, "has_collision", last)
+    enc = encode_quads(quads).localCheckpoint()
     phase(spark, "encode_quads + checkpoint", last)
     warm = eng._warm_encoded_dir()
     eng._persist_warm_encoded(warm, term_dict, enc)
     phase(spark, "_persist_warm_encoded (dict+bucketed enc)", last)
-    reloaded = eng._load_warm_encoded(warm, n_part)
+    reloaded = eng._load_warm_encoded(warm)
     phase(spark, "_load_warm_encoded (re-read)", last)
     assert reloaded is not None
 

@@ -88,3 +88,29 @@ def test_prune_scopes_to_same_fixture_set(tmp_path, monkeypatch):
     assert C.publish(tmp, final)
     left = sorted(os.listdir(root))
     assert left == ["sf0.01-live", "sf0.1-new"], left
+
+
+def test_pointer_survives_cache_root_move(tmp_path, monkeypatch):
+    """A pointer artifact stores its target relative to its generation dir,
+    so moving the whole cache root keeps it readable; pointers written with
+    an absolute target still resolve."""
+    import shutil
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
+    gen = os.path.join(C.cache_root(), "sfX-aaaa")
+    target = os.path.join(gen, "store", "base-1")
+    os.makedirs(target)
+    open(os.path.join(target, "part-0"), "w").write("quads")
+    assert C.publish_pointer(target, os.path.join(gen, "quads"))
+
+    moved = tmp_path / "moved"
+    shutil.move(str(tmp_path / "cache"), str(moved))
+    got = C.read_pointer(str(moved / "sfX-aaaa" / "quads"))
+    assert got is not None
+    assert os.path.samefile(got, moved / "sfX-aaaa" / "store" / "base-1")
+    assert open(os.path.join(got, "part-0")).read() == "quads"
+
+    legacy = moved / "sfX-aaaa" / "legacy"
+    legacy.mkdir()
+    (legacy / "_POINTER").write_text(str(moved / "elsewhere") + "\n")
+    assert C.read_pointer(str(legacy)) == str(moved / "elsewhere")
+    assert C.read_pointer(str(moved / "sfX-aaaa" / "store")) is None

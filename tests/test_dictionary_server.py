@@ -9,12 +9,17 @@ from pyspark.sql import functions as F
 
 def test_dictionary_roundtrip_join_equivalence(spark, quads):
     from graphdb_free_mocha_sa_spark.dictionary import (
-        build_term_dict, decode_ids, encode_quads_ids)
-    d = build_term_dict(quads).cache()
-    # every term got exactly one id
+        build_term_dict_full, encode_quads, has_collision)
+    d = build_term_dict_full(quads).cache()
+    assert not has_collision(d)
+    # every term got exactly one id, and every id names one term
     assert d.groupBy("term").count().where(F.col("count") > 1).isEmpty()
-    enc = encode_quads_ids(quads, d).cache()
+    assert d.groupBy("id").count().where(F.col("count") > 1).isEmpty()
+    enc = encode_quads(quads).cache()
     assert enc.count() == quads.count()
+    # every encoded id is in the dictionary
+    for pos in ("g", "s", "p", "o"):
+        assert enc.join(d, enc[f"{pos}_id"] == d["id"], "left_anti").isEmpty()
 
     # the same star join on ids matches the string-join answer:
     # orders -> customer via o_custkey
@@ -25,9 +30,12 @@ def test_dictionary_roundtrip_join_equivalence(spark, quads):
             .select(F.col("s_id").alias("o"), F.col("o_id").alias("cust"))
     e2 = enc.where(F.col("p_id") == p_dict["urn:x:p/c_nationkey"]) \
             .select(F.col("s_id").alias("cust"), F.col("o_id").alias("nat"))
-    got = decode_ids(e1.join(e2, "cust"), d,
-                     {"o": "o_t", "nat": "nat_t"}) \
-        .select("o_t", "nat_t")
+    terms = d.select("id", "term")
+    got = (e1.join(e2, "cust")
+           .join(terms.withColumnsRenamed({"id": "o", "term": "o_t"}), "o")
+           .join(terms.withColumnsRenamed({"id": "nat", "term": "nat_t"}),
+                 "nat")
+           .select("o_t", "nat_t"))
     want = (quads.where(F.col("p") == "urn:x:p/o_custkey")
             .select(F.col("s").alias("o_t"), F.col("o_lex").alias("cust"))
             .join(quads.where(F.col("p") == "urn:x:p/c_nationkey")
@@ -36,6 +44,60 @@ def test_dictionary_roundtrip_join_equivalence(spark, quads):
             .select("o_t", "nat_t"))
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     d.unpersist(); enc.unpersist()
+
+
+def test_hash_collision_falls_back_to_string_path(spark, quads, monkeypatch):
+    """Ids that name two terms send the snapshot to the string path; the
+    answers stay those of an unencoded engine."""
+    from graphdb_free_mocha_sa_spark import dictionary as D
+    from graphdb_free_mocha_sa_spark.engine import Engine
+    from graphdb_free_mocha_sa_spark.store import QuadStore
+    monkeypatch.setattr(D, "term_id", lambda key: F.xxhash64(key) % 2)
+    store = QuadStore(spark, quads)
+    eng = Engine(spark, store)
+    eng.ENCODE_MIN_QUADS = 0
+    assert eng._should_encode()
+    assert eng._encoded_state() is None
+    assert not eng._should_encode()
+    ref = Engine(spark, store, encoded=False)
+    spec = {"n": "str", "c": "int"}
+    for q in ("SELECT ?n (COUNT(*) AS ?c) WHERE { ?s <urn:x:p/n_name> ?n } "
+              "GROUP BY ?n ORDER BY ?n",
+              "SELECT ?n (COUNT(*) AS ?c) WHERE { ?s <urn:x:p/c_nationkey> ?n "
+              "} GROUP BY ?n ORDER BY ?n"):
+        got = [tuple(r) for r in eng.query(q).finalize(spec).collect()]
+        want = [tuple(r) for r in ref.query(q).finalize(spec).collect()]
+        assert got == want and got
+    assert eng._enc is None
+
+
+def test_encoded_reads_beside_writes_match_string_path(spark, tmp_path):
+    """Every write makes a new snapshot and a new dictionary; after each,
+    the encoded engine answers like the string engine."""
+    from graphdb_free_mocha_sa_spark.engine import Engine
+    from graphdb_free_mocha_sa_spark.store import DurableQuadStore
+    store = DurableQuadStore(spark, str(tmp_path / "store"))
+    eng = Engine(spark, store)
+    eng.ENCODE_MIN_QUADS = 0
+    ref = Engine(spark, store, encoded=False)
+    census = ("SELECT ?p (COUNT(*) AS ?c) WHERE { ?s ?p ?o } "
+              "GROUP BY ?p ORDER BY ?p")
+    lookup = 'SELECT ?s WHERE { ?s <urn:w:p> "a" } ORDER BY ?s'
+    steps = [
+        'INSERT DATA { <urn:w:1> <urn:w:p> "a" . <urn:w:2> <urn:w:p> "a" . '
+        '<urn:w:1> <urn:w:q> <urn:w:2> . <urn:w:3> <urn:w:q> 7 }',
+        'DELETE DATA { <urn:w:2> <urn:w:p> "a" . <urn:w:3> <urn:w:q> 7 }',
+        'INSERT DATA { <urn:w:3> <urn:w:p> "a" . <urn:w:3> <urn:w:r> "b"@en }',
+    ]
+    for step in steps:
+        eng.update(step)
+        for q, spec in ((census, {"p": "str", "c": "int"}),
+                        (lookup, {"s": "str"})):
+            got = [tuple(r) for r in eng.query(q).finalize(spec).collect()]
+            want = [tuple(r) for r in ref.query(q).finalize(spec).collect()]
+            assert got == want and got, (step, q)
+        # the encoded path served this snapshot
+        assert eng._enc is not None and eng._enc[0] == eng._basis()
 
 
 def test_http_handler_query_update_sentinel(spark):

@@ -51,6 +51,28 @@ def test_domain_range_subproperty(spark):
     assert ("urn:rex", RDF_TYPE, "urn:Animal") in got             # rdfs3 via sp
 
 
+def test_domain_range_on_rdf_type_iterates(spark, monkeypatch):
+    """rdf:type with a range takes the multi-iteration fixpoint: rdfs3 fires
+    again on every derived type fact, so one composed rule application is
+    not complete. The distributed closure must equal the driver worklist's
+    iterative one."""
+    from graphdb_free_mocha_sa_spark.operators import inference
+    triples = [
+        ("urn:p", DOM, "urn:C"),
+        (RDF_TYPE, RNG, "urn:M"),
+        ("urn:a", "urn:p", "urn:b"),
+    ]
+    quads = mk_quads(spark, triples)
+    small = {(r.s, r.p, r.o_lex)
+             for r in inference.owl_horst_closure(spark, quads).collect()}
+    monkeypatch.setattr(inference, "SMALL_ABOX_QUADS", 0)
+    dist = {(r.s, r.p, r.o_lex)
+            for r in inference.owl_horst_closure(spark, quads).collect()}
+    assert dist == small
+    assert {("urn:a", RDF_TYPE, "urn:C"), ("urn:C", RDF_TYPE, "urn:M"),
+            ("urn:M", RDF_TYPE, "urn:M")} <= dist
+
+
 def test_transitive_symmetric_inverse(spark):
     from graphdb_free_mocha_sa_spark.operators.inference import owl_horst_closure
     triples = [
