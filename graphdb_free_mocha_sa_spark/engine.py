@@ -15,6 +15,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from graphdb_free_mocha_sa_spark.session import driver_rows
 from graphdb_free_mocha_sa_spark.sparql import algebra as A
 from graphdb_free_mocha_sa_spark.sparql.parser import parse_query
 from graphdb_free_mocha_sa_spark.sparql.results import SENTINEL, ask_json, select_json
@@ -500,8 +501,8 @@ class Engine:
         # sets keep the two broadcast hash EQUI-joins — still never an
         # OR-condition join, which Catalyst can only run as a
         # BroadcastNestedLoopJoin streaming the full table per predicate.
-        head = resources.limit(_DESCRIBE_KEY_BOUND + 1).collect()
-        if len(head) <= _DESCRIBE_KEY_BOUND:
+        head = driver_rows(resources, _DESCRIBE_KEY_BOUND)
+        if head is not None:
             ks = [r["k"] for r in head]
             if not ks:
                 return quads.filter(F.lit(False))

@@ -639,12 +639,7 @@ def fts_match(spark: SparkSession, index: FtsIndex, query: str,
     # re-runs for each consumer (r12 opt, guide §2.4/§5). Per-query hit
     # rows are bounded by |matching (node, qterm) pairs|, the same scale
     # class as the result itself.
-    import os as _os
-    _pin = _os.environ.get("SPARK_GRAFT_FTS_PIN", "eager")
-    if _pin == "eager":
-        matched = matched.localCheckpoint(eager=True)
-    elif _pin == "lazy":
-        matched = matched.localCheckpoint(eager=False)
+    matched = matched.localCheckpoint(eager=True)
 
     # per-(node, qterm) BM25 partial; phrases take a flat ln(1+N) idf
     dfreq = (matched.groupBy("qterm")

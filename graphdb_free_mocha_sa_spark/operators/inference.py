@@ -31,10 +31,13 @@ Derived sameAs integrates through the B41 query-time expansion
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphdb_free_mocha_sa_spark.model import OWL, QUAD_COLS, RDF_TYPE, RDFS
+from graphdb_free_mocha_sa_spark.session import driver_rows
 
 SUBCLASS = RDFS + "subClassOf"
 SUBPROP = RDFS + "subPropertyOf"
@@ -56,28 +59,28 @@ ALL_VALUES = OWL + "allValuesFrom"
 MAX_ITERS = 50
 
 
-def _take_wide(df: DataFrame, n: int):
-    """``df.limit(n).collect()`` as ONE job. executeTake's incremental
-    partition scan (1, then 4x, ...) costs 3-4 jobs to drain a small
-    frame spread over many partitions — the common case for the bounded
-    driver probes here, which read already-checkpointed blocks (r12 opt,
-    guide §1.2). Scoped conf, restored after the take."""
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "10000000")
+@contextmanager
+def _no_constraint_propagation(spark: SparkSession):
+    """Run the maintenance plans with constraint propagation off. Spark
+    4.1: checkpointing a union whose children carry constraints
+    referencing dropped join-side attributes throws "key not found" in
+    UnionBase.rewriteConstraints. These plans are join/anti-join chains
+    over pinned frames, so constraint-derived filter pruning buys nothing
+    here; which shapes trip the error depends on which rule branches are
+    present (the r9 branch pruning exposed it in the closure on fuzz seed
+    7)."""
+    key = "spark.sql.constraintPropagation.enabled"
+    prev = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
     try:
-        return df.limit(n).collect()
+        yield
     finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        spark.conf.set(key, prev)
+
 
 #: owl:AllDifferent list-walk driver probe bound: at most this many
 #: distinctMembers heads (and 8x as many list-cell triples) are walked
 #: driver-side; beyond it the distributed per-hop join walk runs instead.
-#: Module-level so tests can force the distributed path on tiny data.
 AD_LIST_BOUND = 500
 #: DRed re-derive candidate probe: when the removed-term vocabulary fits
 #: this bound, the candidate scan is one InSet-predicate pass over the
@@ -662,17 +665,8 @@ def owl_horst_closure(spark: SparkSession, quads: DataFrame,
         small = _closure_small_abox(spark, head, graph)
         if small is not None:
             return small
-    # same Spark 4.1 Union-constraint-rewrite hazard as the decrement
-    # (checkpointing rule-piece unions can throw "key not found: p#N";
-    # which shapes trip it depends on which rule branches are present —
-    # the r9 branch pruning exposed it here on fuzz seed 7)
-    cp_key = "spark.sql.constraintPropagation.enabled"
-    cp_prev = spark.conf.get(cp_key, "true")
-    spark.conf.set(cp_key, "false")
-    try:
+    with _no_constraint_propagation(spark):
         return _closure_body(spark, quads, graph, n_probe=n_probe)
-    finally:
-        spark.conf.set(cp_key, cp_prev)
 
 
 #: below this base size the fixpoint narrows to 4 partitions (wide shuffles
@@ -819,14 +813,8 @@ def owl_horst_increment(spark: SparkSession, base: DataFrame,
                                  FUNCTIONAL, INV_FUNCTIONAL)))
     if not tbox_delta.isEmpty():
         return None
-    # Spark 4.1 Union-constraint-rewrite guard (see owl_horst_closure)
-    cp_key = "spark.sql.constraintPropagation.enabled"
-    cp_prev = spark.conf.get(cp_key, "true")
-    spark.conf.set(cp_key, "false")
-    try:
+    with _no_constraint_propagation(spark):
         return _increment_body(spark, base, inferred, delta, graph)
-    finally:
-        spark.conf.set(cp_key, cp_prev)
 
 
 def _increment_body(spark: SparkSession, base: DataFrame,
@@ -929,12 +917,10 @@ def owl_horst_decrement(spark: SparkSession, base_after: DataFrame,
     # the collected rows (replacing a distributed isEmpty job) and the rows
     # seed the driver-side cone fixpoint in _decrement_body. Above the
     # bound, the distributed probe + loop run exactly as before.
-    d_head = _take_wide(deleted.select("s", "p", "o_lex", "o_dt", "o_lang"),
-                        DRED_TERMS_BOUND + 1)
-    d_rows = None
-    if len(d_head) <= DRED_TERMS_BOUND:
-        d_rows = [(r["s"], r["p"], r["o_lex"], r["o_dt"], r["o_lang"])
-                  for r in d_head]
+    d_rows = driver_rows(deleted.select("s", "p", "o_lex", "o_dt", "o_lang"),
+                         DRED_TERMS_BOUND)
+    if d_rows is not None:
+        d_rows = [tuple(r) for r in d_rows]
         markers = (TRANSITIVE, SYMMETRIC, FUNCTIONAL, INV_FUNCTIONAL)
         if any(p in TBOX_PREDS or (p == RDF_TYPE and ol in markers)
                for (_, p, ol, _, _) in d_rows):
@@ -947,19 +933,9 @@ def owl_horst_decrement(spark: SparkSession, base_after: DataFrame,
                                      FUNCTIONAL, INV_FUNCTIONAL)))
         if not tbox_delta.isEmpty():
             return None
-    # Spark 4.1: checkpointing a union whose children carry constraints
-    # referencing dropped join-side attributes throws "key not found" in
-    # UnionBase.rewriteConstraints — turn constraint propagation off for
-    # the maintenance plans (they are join/anti-join chains over pinned
-    # frames; constraint-derived filter pruning buys nothing here)
-    cp_key = "spark.sql.constraintPropagation.enabled"
-    cp_prev = spark.conf.get(cp_key, "true")
-    spark.conf.set(cp_key, "false")
-    try:
+    with _no_constraint_propagation(spark):
         return _decrement_body(spark, base_after, inferred, deleted, graph,
                                d_rows)
-    finally:
-        spark.conf.set(cp_key, cp_prev)
 
 
 def _driver_cone_rules_ok(schema: Schema) -> bool:
@@ -1158,8 +1134,8 @@ def _decrement_body(spark: SparkSession, base_after: DataFrame,
         # sort-merge the whole closure — measured 3x the wall)
         ck = cons.select("s", "p", "o_lex").dropDuplicates()
         if over_keys is not None:
-            head = _take_wide(ck, DRED_TERMS_BOUND + 1)
-            if len(head) <= DRED_TERMS_BOUND:
+            head = driver_rows(ck, DRED_TERMS_BOUND)
+            if head is not None:
                 fresh = sorted({(r["s"], r["p"], r["o_lex"])
                                 for r in head} - over_keys)
                 if not fresh:
@@ -1263,14 +1239,14 @@ def _rederive(spark: SparkSession, base_after: DataFrame,
     # removed-term keys are broadcast — r9 profile: 7.0 s -> sub-second).
     # The subject-term list rides on the SAME collect as the full term
     # list via an is-subject flag (r12 opt: was a second collect job).
-    t_rows = _take_wide(
+    t_rows = driver_rows(
         removed.select(F.col("s").alias("t"), F.lit(1).alias("is_s"))
         .unionByName(removed.filter(F.col("o_dt").isNull())
                      .select(F.col("o_lex").alias("t"),
                              F.lit(0).alias("is_s")))
         .groupBy("t").agg(F.max("is_s").alias("is_s")),
-        DRED_TERMS_BOUND + 1)
-    if len(t_rows) <= DRED_TERMS_BOUND:
+        DRED_TERMS_BOUND)
+    if t_rows is not None:
         all_terms = [r["t"] for r in t_rows]
         s_terms = [r["t"] for r in t_rows if r["is_s"] == 1]
         cand = new_known.filter(
@@ -1314,14 +1290,9 @@ def pin_inference(spark: SparkSession, df: DataFrame) -> DataFrame:
     """localCheckpoint an inferred frame with constraint propagation off
     (same Spark 4.1 Union-rewrite hazard as inside the decrement — the
     frame may be a stack of anti-joins over checkpointed members)."""
-    cp_key = "spark.sql.constraintPropagation.enabled"
-    cp_prev = spark.conf.get(cp_key, "true")
-    spark.conf.set(cp_key, "false")
-    try:
+    with _no_constraint_propagation(spark):
         return df.select([F.col(c).alias(c) for c in df.columns]) \
                  .localCheckpoint()
-    finally:
-        spark.conf.set(cp_key, cp_prev)
 
 
 def expand_sameas(quads: DataFrame, comp: DataFrame) -> DataFrame:
@@ -1361,7 +1332,8 @@ def expand_sameas(quads: DataFrame, comp: DataFrame) -> DataFrame:
 
 
 #: iteration count of the last sameas_components run (observability for
-#: the bounded-latency incremental-maintenance tests)
+#: the bounded-latency incremental-maintenance tests only: concurrent
+#: callers overwrite it, so no path decision reads it)
 LAST_CC_ITERS = 0
 
 
@@ -1396,6 +1368,15 @@ def sameas_components(spark: SparkSession, quads: DataFrame,
     class, which seeding would keep merged (callers rebuild from scratch
     after destructive ops)."""
     global LAST_CC_ITERS
+    comp, LAST_CC_ITERS = _sameas_labels(spark, quads, seed, small_path)
+    return comp
+
+
+def _sameas_labels(spark: SparkSession, quads: DataFrame,
+                   seed: DataFrame | None = None,
+                   small_path: bool = True) -> tuple[DataFrame, int]:
+    """:func:`sameas_components` plus its fixpoint iteration count, 0 when
+    the driver union-find answered."""
     edges = (quads.filter((F.col("p") == SAMEAS) & F.col("o_dt").isNull())
              .select(F.col("s").alias("a"), F.col("o_lex").alias("b")))
     if seed is not None:
@@ -1406,10 +1387,10 @@ def sameas_components(spark: SparkSession, quads: DataFrame,
                                            F.col("a").alias("b"))) \
                  .dropDuplicates()
     if small_path:
-        # probe + fetch in ONE bounded job: len(rows) > bound means the
-        # graph is big — fall through to the checkpointed fixpoint
-        rows = _take_wide(edges, SMALL_CC_EDGES + 1)
-        if len(rows) <= SMALL_CC_EDGES:
+        # probe + fetch in ONE bounded job: None means the graph is big —
+        # fall through to the checkpointed fixpoint
+        rows = driver_rows(edges, SMALL_CC_EDGES)
+        if rows is not None:
             parent: dict = {}
 
             def find(x):
@@ -1430,8 +1411,7 @@ def sameas_components(spark: SparkSession, quads: DataFrame,
             for members in comp.values():
                 c = min(members)              # min-label, as the fixpoint
                 out.extend((m, c) for m in members)
-            LAST_CC_ITERS = 0
-            return spark.createDataFrame(out, "term string, canon string")
+            return spark.createDataFrame(out, "term string, canon string"), 0
     edges = edges.localCheckpoint()   # pin: re-read every fixpoint iter
     labels = (edges.select(F.col("a").alias("term"))
               .dropDuplicates()
@@ -1453,8 +1433,7 @@ def sameas_components(spark: SparkSession, quads: DataFrame,
         changed = (merged.alias("m").join(labels.alias("l"), "term")
                    .filter(F.col("m.canon") != F.col("l.canon")))
         if changed.isEmpty():
-            LAST_CC_ITERS = i + 1
-            return merged
+            return merged, i + 1
         labels = merged
     raise RuntimeError("sameAs components did not converge")
 
@@ -1474,6 +1453,11 @@ RDF_REST = _RDF + "rest"
 RDF_NIL = _RDF + "nil"
 
 
+#: sameAs canon dictionaries of at most this many rows are broadcast into
+#: the consistency checks' canonize joins; larger ones shuffle-join.
+CANON_BROADCAST_BOUND = 100_000
+
+
 def _canon_fn(spark: SparkSession, quads: DataFrame):
     """sameAs canon dictionary + a column canonizer over it (shared by the
     full and delta consistency checks). The dictionary is pinned and, when
@@ -1482,15 +1466,15 @@ def _canon_fn(spark: SparkSession, quads: DataFrame):
     them to meet a dictionary of a few thousand sameAs members would
     invert the join. An over-bound dictionary falls back to a shuffle
     join, which is then the right plan."""
-    canon = sameas_components(spark, quads)
-    if LAST_CC_ITERS == 0:
-        # driver union-find path: the dictionary is a LocalRelation —
+    canon, iters = _sameas_labels(spark, quads)
+    if iters == 0:
+        # driver union-find path: the dictionary is driver data —
         # provably bounded (SMALL_CC_EDGES), broadcastable, and pinning
         # it would only ADD a checkpoint job (r11 opt)
         small_dict = True
     else:
         canon = canon.localCheckpoint()
-        small_dict = len(_take_wide(canon, 100_001)) <= 100_000
+        small_dict = driver_rows(canon, CANON_BROADCAST_BOUND) is not None
 
     def canonize(df: DataFrame, col: str) -> DataFrame:
         tag = "__c_" + col
@@ -1535,11 +1519,11 @@ def collect_gate_state(spark: SparkSession, quads: DataFrame):
     The state is a pure function of the store's sameAs/disjointWith/
     complementOf triples, so the engine may cache it across insert-only
     delta-branch commits (those insert none of GATE_SCHEMA_PREDS)."""
-    rows = _take_wide(
+    rows = driver_rows(
         quads.filter(F.col("p").isin(SAMEAS, DISJOINT, COMPLEMENT)
                      & F.col("o_dt").isNull())
-        .select("p", "s", "o_lex"), GATE_STATE_BOUND + 1)
-    if len(rows) > GATE_STATE_BOUND:
+        .select("p", "s", "o_lex"), GATE_STATE_BOUND)
+    if rows is None:
         return None
     parent: dict = {}
 
@@ -1606,12 +1590,12 @@ def consistency_violations_delta_local(spark: SparkSession, quads: DataFrame,
             probe = sorted({m for (i, _c) in new_types
                             for m in members.get(cz(i), (i,))}
                            | {i for (i, _c) in new_types})
-            trows = _take_wide(
+            trows = driver_rows(
                 quads.filter((F.col("p") == RDF_TYPE)
                              & F.col("o_dt").isNull()
                              & F.col("s").isin(probe))
-                .select("s", "o_lex"), GATE_TYPE_PROBE_BOUND + 1)
-            if len(trows) > GATE_TYPE_PROBE_BOUND:
+                .select("s", "o_lex"), GATE_TYPE_PROBE_BOUND)
+            if trows is None:
                 return None
             types_by_canon: dict = {}
             for r in trows:
@@ -1774,12 +1758,12 @@ def consistency_violations(spark: SparkSession, quads: DataFrame) -> DataFrame:
     # per-hop join/checkpoint walk — the common case is FEW AllDifferent
     # lists; the distributed walk remains the only path when the probe
     # overflows (r10: the B42 commit gate runs this per checked update)
-    heads_rows = _take_wide(heads, AD_LIST_BOUND + 1)
+    heads_rows = driver_rows(heads, AD_LIST_BOUND)
     pairs_local = None
-    if heads_rows and len(heads_rows) <= AD_LIST_BOUND:
-        fr = _take_wide(iris.filter(F.col("p").isin(RDF_FIRST, RDF_REST))
-                        .select("s", "p", "o_lex"), AD_LIST_BOUND * 8 + 1)
-        if len(fr) <= AD_LIST_BOUND * 8:
+    if heads_rows:
+        fr = driver_rows(iris.filter(F.col("p").isin(RDF_FIRST, RDF_REST))
+                         .select("s", "p", "o_lex"), AD_LIST_BOUND * 8)
+        if fr is not None:
             firsts: dict = {}
             nexts: dict = {}
             for r in fr:
@@ -1837,7 +1821,7 @@ def consistency_violations(spark: SparkSession, quads: DataFrame) -> DataFrame:
                 diff = diff.unionByName(spark.createDataFrame(
                     pairs_local, "x string, y string"))
             heads_rows = []            # handled; skip the distributed walk
-    if heads_rows:
+    if heads_rows is None or heads_rows:   # overflow, or lists left to walk
         first = iris.filter(F.col("p") == RDF_FIRST).select(
             F.col("s").alias("cell"), F.col("o_lex").alias("member")) \
             .dropDuplicates()

@@ -490,16 +490,10 @@ def lm_score(df: DataFrame, text_col: str = "text",
     # so force-broadcasting it (the r11 verdict's suggestion) moved the
     # median nowhere locally, cost a 13.7 s first-run broadcast build, and
     # would OOM the driver at scale; the events join is left to AQE's
-    # runtime size decision instead. SPARK_GRAFT_LM_BROADCAST: "uni"
-    # (default), "1" (also hint the pair table), "0" (no hints).
-    import os as _os
-    _bcast = _os.environ.get("SPARK_GRAFT_LM_BROADCAST", "uni")
-    pair_logp = (bigrams.join(F.broadcast(unigrams) if _bcast != "0"
-                              else unigrams, "w1")
+    # runtime size decision instead.
+    pair_logp = (bigrams.join(F.broadcast(unigrams), "w1")
                  .crossJoin(F.broadcast(vocab))
                  .select("w1", "w2", logp.alias("__logp")))
-    if _bcast == "1":
-        pair_logp = F.broadcast(pair_logp)
     scored = (events.join(pair_logp, ["w1", "w2"])
               .groupBy(id_col)
               .agg(F.count(F.lit(1)).alias("n_events"),

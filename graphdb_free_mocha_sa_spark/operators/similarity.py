@@ -143,6 +143,12 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.999,
 
     return rep.groupBy("__bi", "__bj").applyInPandas(tile, "id_a long, id_b long")
 
+
+#: k-means Lloyd partials (map partitions x centroids rows) up to this many
+#: are reduced on the driver; above it the distributed groupBy reduce runs.
+KMEANS_DRIVER_REDUCE_BOUND = 65_536
+
+
 def _l2n(M: "np.ndarray") -> "np.ndarray":
     return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
 
@@ -169,16 +175,13 @@ def kmeans_centroids(corpus: DataFrame, n_centroids: int = 16, iters: int = 2,
     vecs = corpus.select(F.col(vec_col).alias("v"))
 
     # The per-iteration reduce is over ≤ partitions × n_centroids partial
-    # rows. While that stays driver-bounded (default 64k rows — a few MB of
+    # rows. While that stays within KMEANS_DRIVER_REDUCE_BOUND (a few MB of
     # doubles), reduce the partials ON THE DRIVER: each Lloyd iteration is
     # then ONE single-stage job instead of mapInPandas → Exchange →
     # applyInPandas (r12 opt, guide §1.2/§2.4 — the shuffle existed only to
     # average ~512 tiny rows). Above the bound (a 100 TB corpus has far
     # more map partitions) the distributed groupBy reduce remains. Same
     # math either way: per-cid partial-sum mean, then L2 re-normalize.
-    import os as _os
-    driver_bound = int(_os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_REDUCE_BOUND",
-                                       "65536"))
     nparts = vecs.rdd.getNumPartitions()
     for _ in range(iters):
         bc = spark.sparkContext.broadcast(C)
@@ -199,7 +202,7 @@ def kmeans_centroids(corpus: DataFrame, n_centroids: int = 16, iters: int = 2,
             yield out[out["c"] > 0]
 
         part_df = vecs.mapInPandas(partials, "cid int, s array<double>, c long")
-        if nparts * n_centroids <= driver_bound:
+        if nparts * n_centroids <= KMEANS_DRIVER_REDUCE_BOUND:
             C_new = C.copy()                   # empty clusters keep position
             sums = np.zeros_like(C)
             cnts = np.zeros(len(C), dtype="int64")

@@ -4,14 +4,15 @@ Local testing runs on local[N]; the config choices below are the ones that
 matter on a real cluster too: AQE (runtime re-planning, skew-join splitting,
 partition coalescing), Arrow for any pandas exchange, and a shuffle-partition
 count sized for the local fixture scale (override via env/builder for bigger
-deployments).
+deployments). Also :func:`driver_rows`, the bounded driver probe that the
+engine and the operators share.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
@@ -37,12 +38,11 @@ def get_spark(app_name: str = "graphdb_free_mocha_sa_spark",
         # version of the r11 static SHJ preference. Adjudicated by a
         # rotated-order interleaved A/B at sf0.1 (r12, VERDICT r11 item 7;
         # record in OPTIMIZATION_r12.md): static SHJ preference
-        # (PREFER_SMJ=false) lost or tied on every contested line
+        # (preferSortMergeJoin=false) lost or tied on every contested line
         # (b1_scan med 0.48 vs 0.29 s, b13_path_negated 1.63 vs 1.03 s,
         # b4_optional/b2b_star6 ties), and its r11 wins were window
         # artifacts of a contended r10 baseline.
-        .config("spark.sql.join.preferSortMergeJoin",
-                os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"))
+        .config("spark.sql.join.preferSortMergeJoin", "true")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                 os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "64m"))
         # AQE partition sizing, env-parameterised. parallelismFirst=false
@@ -88,3 +88,19 @@ def get_spark(app_name: str = "graphdb_free_mocha_sa_spark",
     except Exception:  # noqa: BLE001 — logging backend variance is cosmetic
         pass
     return spark
+
+
+def driver_rows(df: DataFrame, bound: int) -> list[Row] | None:
+    """The rows of ``df`` while there are at most ``bound`` of them, else
+    ``None``: the one probe behind every driver-or-distributed fast path.
+
+    ``limit().rdd.collect()`` runs as ONE Spark job (per-partition local
+    limits, then a single-partition global limit), where
+    ``limit().collect()`` ramps executeTake over a many-partition frame in
+    up to four jobs. It writes no session conf, so concurrent readers of
+    the shared session see nothing of it."""
+    rdd = df.limit(bound + 1).rdd
+    # a plan AQE proved empty has no partitions, and collecting it would
+    # still post a (stage-less) job
+    rows = rdd.collect() if rdd.getNumPartitions() else []
+    return rows if len(rows) <= bound else None

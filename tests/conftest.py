@@ -25,6 +25,19 @@ def spark():
     yield s
 
 
+@pytest.fixture(params=["fast", "fallback"])
+def bounded_path(request, monkeypatch):
+    """Run a test twice: on the driver fast paths, and with every bounded
+    driver probe (``session.driver_rows``) reporting overflow, so each
+    answer is also produced by the distributed fallback."""
+    if request.param == "fallback":
+        from graphdb_free_mocha_sa_spark import engine
+        from graphdb_free_mocha_sa_spark.operators import inference
+        for mod in (engine, inference):
+            monkeypatch.setattr(mod, "driver_rows", lambda df, bound: None)
+    return request.param
+
+
 @pytest.fixture(scope="session")
 def tables(spark):
     from graphdb_free_mocha_sa_spark.sources.registry import load_tables

@@ -80,9 +80,10 @@ def test_dred_rederives_from_surviving_premise(spark):
     assert ("urn:x", RDF_TYPE, "urn:C") in got
 
 
-def test_dred_transitive_chain(spark):
+def test_dred_transitive_chain(spark, bounded_path):
     """Deleting a middle edge of a transitive chain retracts exactly the
-    pairs that crossed it."""
+    pairs that crossed it — through the driver-side seed, cone keys and
+    re-derive terms, and through their distributed fallbacks."""
     edges = [(f"urn:n{i}", "urn:t", f"urn:n{i+1}") for i in range(5)]
     st = _store(spark, edges + [("urn:t", RDF_TYPE, TRANS)])
     assert ("urn:n0", "urn:t", "urn:n5") in _inferred_set(st)

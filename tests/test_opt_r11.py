@@ -37,37 +37,47 @@ BASE = [
 ]
 
 
-def test_local_gate_matches_distributed_on_each_rule(spark):
+def test_local_gate_matches_distributed_on_each_rule(spark, bounded_path):
     """Every violation family through the fast path vs the DF plan —
-    identical abort/commit decisions and rule names."""
+    identical abort/commit decisions and rule names. On the fallback the
+    driver gate state overflows, and the DF plan alone (fixpoint sameAs
+    canon, shuffle-joined) must still give the same answers."""
     from graphdb_free_mocha_sa_spark.operators.inference import (
         collect_gate_state, consistency_violations_delta,
         consistency_violations_delta_local)
     quads = spark.createDataFrame(BASE, QUAD_SCHEMA).localCheckpoint()
     cases = [
         # sameAs alias clash: urn:a ~ urn:b typed K1, insert a type K2
-        [("urn:g", "urn:a", RDFT, "urn:K2", None, None, None, None)],
+        ([("urn:g", "urn:a", RDFT, "urn:K2", None, None, None, None)],
+         [("cax-dw", "urn:a")]),
         # complementOf clash on the same individual
-        [("urn:g", "urn:x", RDFT, "urn:C2", None, None, None, None)],
+        ([("urn:g", "urn:x", RDFT, "urn:C2", None, None, None, None)],
+         [("owl-comp", "urn:x")]),
         # owl:Nothing membership
-        [("urn:g", "urn:y", RDFT, OWL + "Nothing", None, None, None, None)],
+        ([("urn:g", "urn:y", RDFT, OWL + "Nothing", None, None, None, None)],
+         [("owl-nothing", "urn:y")]),
         # differentFrom folded into one sameAs class
-        [("urn:g", "urn:a", OWL + "differentFrom", "urn:b",
-          None, None, None, None)],
+        ([("urn:g", "urn:a", OWL + "differentFrom", "urn:b",
+           None, None, None, None)],
+         [("owl-dif", "urn:a")]),
         # green: unrelated type + plain fact
-        [("urn:g", "urn:z", RDFT, "urn:K9", None, None, None, None),
-         ("urn:g", "urn:z", "urn:p", "urn:o", None, None, None, None)],
+        ([("urn:g", "urn:z", RDFT, "urn:K9", None, None, None, None),
+          ("urn:g", "urn:z", "urn:p", "urn:o", None, None, None, None)],
+         []),
     ]
-    for delta in cases:
+    for delta, want in cases:
         post = quads.unionByName(
             spark.createDataFrame(delta, QUAD_SCHEMA)).localCheckpoint()
-        state = collect_gate_state(spark, post)
-        assert state is not None
-        local = consistency_violations_delta_local(spark, post, delta, state)
         dist = consistency_violations_delta(spark, post, delta).collect()
+        assert sorted({(r["rule"], r["x"]) for r in dist}) == want, \
+            f"delta={delta}"
+        state = collect_gate_state(spark, post)
+        if bounded_path == "fallback":
+            assert state is None
+            continue
+        local = consistency_violations_delta_local(spark, post, delta, state)
         assert local is not None
         got = sorted((v["rule"], v["x"]) for v in local)
-        want = sorted({(r["rule"], r["x"]) for r in dist})
         assert got == want, f"delta={delta}"
 
 

@@ -270,11 +270,9 @@ def test_alldifferent_multigraph_duplicate_edge_is_not_a_dag(spark):
     assert ("owl-dif", "urn:a", "urn:a") in _viol(eng)
 
 
-def test_alldifferent_distributed_walk_guards(spark, monkeypatch):
-    """Force the distributed walk (probe bound 0) and re-check both the
-    convergent-DAG raise and a green straight list."""
-    from graphdb_free_mocha_sa_spark.operators import inference
-    monkeypatch.setattr(inference, "AD_LIST_BOUND", 0)
+def test_alldifferent_distributed_walk_guards(spark, bounded_path):
+    """The driver walk and the distributed walk (probe overflow) agree on
+    a sameAs clash, the convergent-DAG raise and a green merged list."""
     eng = _engine(spark)
     eng.update(_ad_prelude(f"""
       _:l1 <{RDF}first> <urn:a> .

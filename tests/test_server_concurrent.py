@@ -187,3 +187,60 @@ def test_dred_maintenance_under_snapshot_readers(served_engine):
               "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type> ?t }")
     assert int(final["results"]["bindings"][0]["c"]["value"]) == 0
     assert len(reads) >= 2
+
+
+def test_maintenance_and_queries_write_no_limit_conf(spark, monkeypatch):
+    """The server answers every thread from one SparkSession, so no
+    maintenance or query path may write a session-global
+    ``spark.sql.limit.*`` key: a concurrent reader would plan under it,
+    and two overlapping restores could leave it set for good. Covers a
+    DRed delete, a checked insert (full, then delta gate), a consistency
+    check over an owl:AllDifferent list, and a DESCRIBE."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from graphdb_free_mocha_sa_spark.engine import Engine
+    from graphdb_free_mocha_sa_spark.model import QUAD_SCHEMA
+    from graphdb_free_mocha_sa_spark.store import QuadStore
+
+    owl = "http://www.w3.org/2002/07/owl#"
+    rdf = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+    sc = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
+    written: list[str] = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def spy_set(self, key, value):
+        written.append(key)
+        return real_set(self, key, value)
+
+    def spy_unset(self, key):
+        written.append(key)
+        return real_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", spy_unset)
+
+    def quads(triples):
+        return spark.createDataFrame(
+            [("urn:g", s, p, o, None, None, None, None)
+             for s, p, o in triples], QUAD_SCHEMA)
+
+    st = QuadStore(spark, quads([("urn:A", sc, "urn:B"),
+                                 ("urn:x", rdf + "type", "urn:A")]))
+    st.materialize_inference()
+    st.delete_quads(quads([("urn:x", rdf + "type", "urn:A")]))
+
+    eng = Engine(spark, QuadStore(spark), check_inconsistencies=True)
+    eng.update(f"""INSERT DATA {{
+      <urn:K1> <{owl}disjointWith> <urn:K2> .
+      <urn:a> <{owl}sameAs> <urn:b> .
+      _:ad <{rdf}type> <{owl}AllDifferent> .
+      _:ad <{owl}distinctMembers> _:l1 .
+      _:l1 <{rdf}first> <urn:a> . _:l1 <{rdf}rest> _:l2 .
+      _:l2 <{rdf}first> <urn:c> . _:l2 <{rdf}rest> <{rdf}nil> . }}""")
+    eng.update(f"INSERT DATA {{ <urn:b> <{rdf}type> <urn:K1> }}")
+    assert eng.check_consistency().collect() == []
+    assert eng.query("DESCRIBE <urn:a>").count() > 0
+
+    # the spy sees the maintenance plans' constraint-propagation scope
+    assert "spark.sql.constraintPropagation.enabled" in written
+    assert [k for k in written if k.startswith("spark.sql.limit.")] == []

@@ -518,10 +518,11 @@ def test_pn_local_escapes_and_percent(spark):
     assert triples == [("urn:ex#f,g", "urn:ex#p", ("urn:ex#x/y", None, None))]
 
 
-def test_describe_expands_bnode_closure(spark):
+def test_describe_expands_bnode_closure(spark, bounded_path):
     """r6c probe fix: DESCRIBE returns the concise bounded description —
     blank-node objects expand transitively (rdf4j DescribeIteration),
-    unrelated bnodes stay out, inbound arcs to the resource kept."""
+    unrelated bnodes stay out, inbound arcs to the resource kept. Same
+    answer from the single-scan InSet path and the equi-join fallback."""
     from graphdb_free_mocha_sa_spark.engine import Engine
     from graphdb_free_mocha_sa_spark.store import QuadStore
     eng = Engine(spark, QuadStore(spark))
