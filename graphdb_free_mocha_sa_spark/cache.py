@@ -154,6 +154,22 @@ def read_pointer(path: str) -> str | None:
     return None
 
 
+def published_source(path: str) -> str | None:
+    """Directory to read a published artifact from: a pointer's target, or
+    the artifact itself; None when nothing is published. A pointer whose
+    target is gone is removed here, so the caller rebuilds the artifact
+    and can publish it in the pointer's place."""
+    if not is_published(path):
+        return None
+    target = read_pointer(path)
+    if target is None:
+        return path
+    if os.path.isdir(target):
+        return target
+    shutil.rmtree(path, ignore_errors=True)
+    return None
+
+
 def _prune_stale_generations(final_path: str) -> None:
     """Best-effort GC: fixture regeneration changes the fingerprint, so
     superseded generations of the SAME fixture set (matched by the sf-dir

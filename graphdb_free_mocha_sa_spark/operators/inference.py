@@ -16,6 +16,20 @@ The reference engine materializes inference on write with ruleset
 * **owl:sameAs as connected components** — iterative min-id label propagation
   producing a canonical-id dictionary (B41).
 
+Each rule is written once per execution shape:
+
+* :func:`_rule_step` — the distributed semi-naive step: the delta×TBox
+  rules, transitive chaining, rdfp1/2 and rdfp15/16 against the known world.
+  The closure, the increment and both DRed phases run it.
+* :func:`_fixpoint` — the semi-naive loop (anti-join against the known
+  world, pin, stop when nothing is new) shared by the closure and the
+  increment. The DRed over-delete keeps its own loop: its newness test is
+  against the over-deleted set, not the known world.
+* :func:`_driver_rule_step` — the driver rule table of the delta×TBox rules
+  (rdfs2/3/7/9, rdfp3/8/14a/14b) over 7-tuple facts. The small-ABox
+  worklist adds its stateful rules (rdfp1/2/4/15/16) around it; the DRed
+  over-delete cone runs it alone.
+
 Implemented rule subset (declared scope in SURVEY §2.2.5): rdfs2 (domain),
 rdfs3 (range), rdfs5/7 (subPropertyOf), rdfs9/11 (subClassOf), rdfp3
 (SymmetricProperty), rdfp4 (TransitiveProperty), rdfp8 (inverseOf),
@@ -31,12 +45,14 @@ Derived sameAs integrates through the B41 query-time expansion
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphdb_free_mocha_sa_spark.model import OWL, QUAD_COLS, RDF_TYPE, RDFS
+from graphdb_free_mocha_sa_spark.model import (OWL, QUAD_COLS, QUAD_SCHEMA,
+                                               RDF_TYPE, RDFS)
 from graphdb_free_mocha_sa_spark.session import driver_rows
 
 SUBCLASS = RDFS + "subClassOf"
@@ -56,7 +72,22 @@ HAS_VALUE = OWL + "hasValue"
 SOME_VALUES = OWL + "someValuesFrom"
 ALL_VALUES = OWL + "allValuesFrom"
 
+TBOX_PREDS = (SUBCLASS, SUBPROP, DOMAIN, RANGE, INVERSE, EQ_CLASS, EQ_PROP,
+              ON_PROPERTY, HAS_VALUE, SOME_VALUES, ALL_VALUES)
+#: rdf:type objects that declare a property's OWL class (TBox facts)
+PROPERTY_CLASSES = (TRANSITIVE, SYMMETRIC, FUNCTIONAL, INV_FUNCTIONAL)
+
 MAX_ITERS = 50
+
+#: the dedup key of a quad within one graph (no o_num/o_ts: derived from
+#: o_lex + o_dt)
+_KEY5 = ["s", "p", "o_lex", "o_dt", "o_lang"]
+#: the o_dt/o_lang/o_num/o_ts of a driver fact with an IRI object
+_NULLS = (None, None, None, None)
+
+_CONSTRAINT_PROP = "spark.sql.constraintPropagation.enabled"
+_cp_lock = threading.Lock()
+_cp_scopes: dict = {}            # session -> [open scopes, value to restore]
 
 
 @contextmanager
@@ -68,14 +99,27 @@ def _no_constraint_propagation(spark: SparkSession):
     over pinned frames, so constraint-derived filter pruning buys nothing
     here; which shapes trip the error depends on which rule branches are
     present (the r9 branch pruning exposed it in the closure on fuzz seed
-    7)."""
-    key = "spark.sql.constraintPropagation.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
+    7).
+
+    The conf is session-global and the server runs maintenance from many
+    threads, so scopes on one session may overlap in any order: the first
+    to open saves the value and sets it off, the last to close restores
+    it."""
+    with _cp_lock:
+        scope = _cp_scopes.get(spark)
+        if scope is None:
+            scope = _cp_scopes[spark] = [0, spark.conf.get(_CONSTRAINT_PROP,
+                                                           "true")]
+            spark.conf.set(_CONSTRAINT_PROP, "false")
+        scope[0] += 1
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        with _cp_lock:
+            scope[0] -= 1
+            if scope[0] == 0:
+                del _cp_scopes[spark]
+                spark.conf.set(_CONSTRAINT_PROP, scope[1])
 
 
 #: owl:AllDifferent list-walk driver probe bound: at most this many
@@ -104,8 +148,53 @@ def _closure(pairs: set[tuple[str, str]]) -> set[tuple[str, str]]:
     return out
 
 
-def _iri_quad(g, s, p, o):
-    return (g, s, p, o, None, None, None, None)
+def _tbox_filter() -> Column:
+    """The TBox-change predicate over a quad frame: a schema predicate, or
+    rdf:type naming an OWL property class."""
+    return (F.col("p").isin(*TBOX_PREDS)
+            | ((F.col("p") == RDF_TYPE)
+               & F.col("o_lex").isin(*PROPERTY_CLASSES)))
+
+
+def _is_tbox(p: str, o_lex: str) -> bool:
+    """:func:`_tbox_filter` for one driver-side triple."""
+    return p in TBOX_PREDS or (p == RDF_TYPE and o_lex in PROPERTY_CLASSES)
+
+
+def _touches_tbox(delta: DataFrame, rows=None) -> bool:
+    """Whether a changed quad set holds a TBox triple (the caller then
+    re-materializes). ``rows``, when given, is the same set already on the
+    driver as ``(s, p, o_lex, ...)`` tuples: a Python check, no job."""
+    if rows is not None:
+        return any(_is_tbox(r[1], r[2]) for r in rows)
+    return not delta.filter(_tbox_filter()).isEmpty()
+
+
+def _null_object() -> list[Column]:
+    """o_dt/o_lang/o_num/o_ts of a derived fact with an IRI object. Fresh
+    columns per call: a shared alias would put one expression id in two
+    union branches."""
+    return [F.lit(None).cast("string").alias("o_dt"),
+            F.lit(None).cast("string").alias("o_lang"),
+            F.lit(None).cast("double").alias("o_num"),
+            F.lit(None).cast("timestamp").alias("o_ts")]
+
+
+def _union(frames) -> DataFrame | None:
+    """unionByName of the frames that are not None; None if all are."""
+    out = None
+    for df in frames:
+        if df is not None:
+            out = df if out is None else out.unionByName(df)
+    return out
+
+
+def _pin(df: DataFrame) -> DataFrame:
+    """localCheckpoint under fresh expression ids: Spark 4.1's Union
+    constraint rewrite throws "key not found" when a union of
+    checkpointed frames re-uses attribute ids."""
+    return df.select([F.col(c).alias(c) for c in df.columns]) \
+             .localCheckpoint()
 
 
 class Schema:
@@ -119,15 +208,7 @@ class Schema:
             # largest predicate in a real store, so collecting it
             # unrestricted would be a driver OOM at scale. This keeps the
             # collect O(TBox), independent of ABox type cardinality.
-            tbox_rows = (quads.filter(F.col("p").isin(SUBCLASS, SUBPROP, DOMAIN,
-                                                      RANGE, INVERSE, EQ_CLASS,
-                                                      EQ_PROP,
-                                                      ON_PROPERTY, HAS_VALUE,
-                                                      SOME_VALUES, ALL_VALUES)
-                                      | ((F.col("p") == RDF_TYPE)
-                                         & F.col("o_lex").isin(
-                                             TRANSITIVE, SYMMETRIC,
-                                             FUNCTIONAL, INV_FUNCTIONAL)))
+            tbox_rows = (quads.filter(_tbox_filter())
                          .filter(F.col("o_dt").isNull()
                                  | (F.col("p") == HAS_VALUE))
                          .select("p", "s", "o_lex", "o_dt", "o_lang",
@@ -223,8 +304,13 @@ class Schema:
                            for w in sorted(ws)]
 
 
-def _rule_applier(spark: SparkSession, schema: Schema, graph: str):
-    """One-step rule application closure for a fixed (already-closed) TBox."""
+def _rule_step(spark: SparkSession, schema: Schema, graph: str):
+    """The semi-naive step for a fixed (already-closed) TBox, as
+    ``step(delta, known, trans=None)``: every rule applied with at least
+    one premise in ``delta``, the other (if any) in ``known``. ``trans``
+    replaces the transitive chaining piece (:func:`_trans_step`): the
+    closure's first round passes the path-engine closures, the DRed
+    over-delete its both-sides extension."""
     g = F.lit(graph)
 
     def df_of(pairs: set[tuple[str, str]], a: str, b: str) -> DataFrame:
@@ -242,13 +328,8 @@ def _rule_applier(spark: SparkSession, schema: Schema, graph: str):
     hv_df = spark.createDataFrame(
         [(v, p) + val for (v, p, val) in schema.has_value], hv_schema)
 
-    def null_cols():
-        return [F.lit(None).cast("string").alias("o_dt"),
-                F.lit(None).cast("string").alias("o_lang"),
-                F.lit(None).cast("double").alias("o_num"),
-                F.lit(None).cast("timestamp").alias("o_ts")]
-
     def apply_rules(delta: DataFrame) -> DataFrame:
+        """The delta×TBox rules (rdfs2/3/7/9, rdfp3/8/14a/14b)."""
         pieces: list[DataFrame] = []
         iri_delta = delta.filter(F.col("o_dt").isNull())
         types = delta.filter(F.col("p") == RDF_TYPE)
@@ -261,7 +342,7 @@ def _rule_applier(spark: SparkSession, schema: Schema, graph: str):
         if schema.subclass:
             pieces.append(types.join(F.broadcast(sc_df), types["o_lex"] == sc_df["c1"])
                           .select(g.alias("g"), F.col("s"), F.lit(RDF_TYPE).alias("p"),
-                                  F.col("c2").alias("o_lex"), *null_cols()))
+                                  F.col("c2").alias("o_lex"), *_null_object()))
         # rdfs7: rel(s,p1,o) & sp(p1,p2) => rel(s,p2,o)  (keeps literal shadows)
         if schema.subprop:
             stepped = delta.join(F.broadcast(sp_df), delta["p"] == sp_df["p1"])
@@ -273,25 +354,25 @@ def _rule_applier(spark: SparkSession, schema: Schema, graph: str):
         if schema.domain:
             pieces.append(delta.join(F.broadcast(dom_df), delta["p"] == dom_df["dp"])
                           .select(g.alias("g"), F.col("s"), F.lit(RDF_TYPE).alias("p"),
-                                  F.col("dc").alias("o_lex"), *null_cols()))
+                                  F.col("dc").alias("o_lex"), *_null_object()))
         # rdfs3: rel(s,p,o) & rng(p,c) & o is IRI => type(o,c)
         if schema.range:
             pieces.append(iri_delta.join(F.broadcast(rng_df), iri_delta["p"] == rng_df["rp"])
                           .select(g.alias("g"), F.col("o_lex").alias("s"),
                                   F.lit(RDF_TYPE).alias("p"),
-                                  F.col("rc").alias("o_lex"), *null_cols()))
+                                  F.col("rc").alias("o_lex"), *_null_object()))
         # rdfp8: rel(s,p1,o) & inv(p1,p2) => rel(o,p2,s) (IRI objects only)
         if schema.inverse:
             pieces.append(iri_delta.join(F.broadcast(inv_df), iri_delta["p"] == inv_df["ip1"])
                           .select(g.alias("g"), F.col("o_lex").alias("s"),
                                   F.col("ip2").alias("p"), F.col("s").alias("o_lex"),
-                                  *null_cols()))
+                                  *_null_object()))
         # rdfp3: symmetric
         if schema.symmetric:
             sym = iri_delta.filter(F.col("p").isin(*schema.symmetric))
             pieces.append(sym.select(g.alias("g"), F.col("o_lex").alias("s"),
                                      F.col("p"), F.col("s").alias("o_lex"),
-                                     *null_cols()))
+                                     *_null_object()))
         if schema.has_value:
             # rdfp14a: u p w (value matches, literal or IRI) => type(u, v)
             hits = delta.join(
@@ -303,7 +384,7 @@ def _rule_applier(spark: SparkSession, schema: Schema, graph: str):
             pieces.append(hits.select(g.alias("g"), F.col("s"),
                                       F.lit(RDF_TYPE).alias("p"),
                                       F.col("hv").alias("o_lex"),
-                                      *null_cols()))
+                                      *_null_object()))
             # rdfp14b: type(u, v) => u p w (carries the value's shadows)
             typed = types.join(F.broadcast(hv_df),
                                types["o_lex"] == hv_df["hv"])
@@ -319,47 +400,100 @@ def _rule_applier(spark: SparkSession, schema: Schema, graph: str):
             # delta.filter(False) — reusing delta's attribute ids trips
             # Spark 4.1's Union constraint rewrite ("key not found: p#N")
             # when the caller unions this with other delta-derived pieces
-            # and checkpoints (same hazard the decrement _pin documents)
-            from graphdb_free_mocha_sa_spark.model import QUAD_SCHEMA
+            # and checkpoints (same hazard _pin documents)
             return spark.createDataFrame([], QUAD_SCHEMA).select(*QUAD_COLS)
-        out = pieces[0]
-        for piece in pieces[1:]:
-            out = out.unionByName(piece)
-        return out.select(*QUAD_COLS)
+        return _union(pieces).select(*QUAD_COLS)
 
-    return apply_rules
+    def step(delta: DataFrame, known: DataFrame,
+             trans: DataFrame | None = None) -> DataFrame:
+        new = apply_rules(delta)
+        if trans is None:
+            trans = _trans_step(delta, known, schema.transitive, graph)
+        return _union([new, trans,
+                       _functional_step(delta, known, schema, graph),
+                       _restriction_step(spark, delta, known, schema, graph)])
+
+    return step
 
 
 def _anti_known(new: DataFrame, known: DataFrame) -> DataFrame:
-    return (new.dropDuplicates(["s", "p", "o_lex", "o_dt", "o_lang"])
+    return (new.dropDuplicates(_KEY5)
             .join(known.select("s", "p", "o_lex").withColumnRenamed("s", "__ks")
                   .withColumnRenamed("p", "__kp").withColumnRenamed("o_lex", "__ko"),
                   (F.col("s") == F.col("__ks")) & (F.col("p") == F.col("__kp"))
                   & (F.col("o_lex") == F.col("__ko")), "left_anti"))
 
 
-def _trans_step(delta: DataFrame, known: DataFrame, props, graph: str) -> DataFrame | None:
-    """One transitive-chaining step: delta edges extend known chains on both
-    sides (semi-naive: only chains through the delta are recomputed)."""
+def _fixpoint(step, delta: DataFrame, known: DataFrame,
+              first_trans: DataFrame | None = None,
+              one_shot: bool = False) -> DataFrame | None:
+    """The semi-naive loop of the closure and the increment: each round
+    runs ``step`` on the previous round's new facts, keeps the facts whose
+    (s, p, o_lex) ``known`` lacks, pins them, and stops when none are
+    left. Returns the union of the pinned rounds, or None when the first
+    round derives nothing new.
+
+    ``first_trans`` is the first round's transitive piece (see
+    :func:`_rule_step`). ``one_shot`` stops after the first round, for a
+    rule set that is complete in one application.
+
+    ``known`` grows as a LAZY union of pinned pieces (r11 opt, guide
+    §2.4): re-pinning ``known ∪ new`` each round copied the whole known
+    set every step — at cluster scale a full-store copy per round. Each
+    piece is itself checkpointed, so scanning the union reads pinned
+    blocks without recomputation."""
+    inferred = None
+    for i in range(MAX_ITERS):
+        new = step(delta, known, first_trans if i == 0 else None)
+        new = _anti_known(new, known).localCheckpoint()
+        if new.isEmpty():
+            return inferred
+        inferred = new if inferred is None else inferred.unionByName(new)
+        if one_shot:
+            return inferred
+        known = known.unionByName(new)
+        delta = new
+    raise RuntimeError(f"inference did not converge in {MAX_ITERS} iterations")
+
+
+def _trans_step(delta: DataFrame, known: DataFrame, props, graph: str,
+                both_sides: bool = False) -> DataFrame | None:
+    """One transitive-chaining step: delta edges extend known chains on
+    either side (semi-naive: only chains through the delta are
+    recomputed).
+
+    ``both_sides`` adds the over-delete accelerator: a deleted transitive
+    edge's cone is known* ⋈ d ⋈ known*, and extending BOTH sides in one
+    pass collapses the semi-naive loop from O(chain) to 2 iterations (the
+    closure contains every sub-chain, so the one-hop-each-side join over
+    the closure reaches every crossing pair)."""
     g = F.lit(graph)
-    out = None
+
+    def edges(df: DataFrame, p: str, s: str, o: str) -> DataFrame:
+        return df.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
+                 .select(F.col("s").alias(s), F.col("o_lex").alias(o))
+
+    def quads(pairs: DataFrame, p: str) -> DataFrame:
+        return pairs.select(g.alias("g"), "s", F.lit(p).alias("p"), "o_lex",
+                            *_null_object()).select(*QUAD_COLS)
+
+    steps, crossings = [], []
     for p in sorted(props):
-        d = delta.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("s").alias("ds"), F.col("o_lex").alias("do"))
-        k = known.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("s").alias("ks"), F.col("o_lex").alias("ko"))
+        d, k = edges(delta, p, "ds", "do"), edges(known, p, "ks", "ko")
         fwd = d.join(k, F.col("do") == F.col("ks")).select(
             F.col("ds").alias("s"), F.col("ko").alias("o_lex"))
         bwd = k.join(d, F.col("ko") == F.col("ds")).select(
             F.col("ks").alias("s"), F.col("do").alias("o_lex"))
-        both = fwd.unionByName(bwd).dropDuplicates().select(
-            g.alias("g"), "s", F.lit(p).alias("p"), "o_lex",
-            F.lit(None).cast("string").alias("o_dt"),
-            F.lit(None).cast("string").alias("o_lang"),
-            F.lit(None).cast("double").alias("o_num"),
-            F.lit(None).cast("timestamp").alias("o_ts")).select(*QUAD_COLS)
-        out = both if out is None else out.unionByName(both)
-    return out
+        steps.append(quads(fwd.unionByName(bwd).dropDuplicates(), p))
+        if both_sides:
+            d, k = edges(delta, p, "ds", "do"), edges(known, p, "ks", "ko")
+            k2 = edges(known, p, "ks2", "ko2")
+            crossings.append(quads(
+                k.join(d, F.col("ko") == F.col("ds"))
+                .join(k2, F.col("do") == F.col("ks2"))
+                .select(F.col("ks").alias("s"), F.col("ko2").alias("o_lex")),
+                p))
+    return _union(steps + crossings)
 
 
 def _functional_step(delta: DataFrame, known: DataFrame, schema: Schema,
@@ -380,33 +514,23 @@ def _functional_step(delta: DataFrame, known: DataFrame, schema: Schema,
             F.col("o_lex").alias("s"), F.col("s").alias("o_lex")))
         return both.dropDuplicates().select(
             g.alias("g"), "s", F.lit(SAMEAS).alias("p"), "o_lex",
-            F.lit(None).cast("string").alias("o_dt"),
-            F.lit(None).cast("string").alias("o_lang"),
-            F.lit(None).cast("double").alias("o_num"),
-            F.lit(None).cast("timestamp").alias("o_ts")).select(*QUAD_COLS)
+            *_null_object()).select(*QUAD_COLS)
 
-    out = None
-    for p in sorted(schema.functional):
-        d = delta.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("s").alias("dk"), F.col("o_lex").alias("dv"))
-        k = known.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("s").alias("kk"), F.col("o_lex").alias("kv"))
-        pairs = (d.join(k, F.col("dk") == F.col("kk"))
-                 .filter(F.col("dv") != F.col("kv"))
-                 .select(F.col("dv").alias("s"), F.col("kv").alias("o_lex")))
-        q = quads_of(pairs)
-        out = q if out is None else out.unionByName(q)
-    for p in sorted(schema.inv_functional):
-        d = delta.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("o_lex").alias("dk"), F.col("s").alias("dv"))
-        k = known.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("o_lex").alias("kk"), F.col("s").alias("kv"))
-        pairs = (d.join(k, F.col("dk") == F.col("kk"))
-                 .filter(F.col("dv") != F.col("kv"))
-                 .select(F.col("dv").alias("s"), F.col("kv").alias("o_lex")))
-        q = quads_of(pairs)
-        out = q if out is None else out.unionByName(q)
-    return out
+    out = []
+    # rdfp1 keys on the subject, rdfp2 on the object
+    for props, key, val in ((schema.functional, "s", "o_lex"),
+                            (schema.inv_functional, "o_lex", "s")):
+        for p in sorted(props):
+            d = delta.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
+                     .select(F.col(key).alias("dk"), F.col(val).alias("dv"))
+            k = known.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
+                     .select(F.col(key).alias("kk"), F.col(val).alias("kv"))
+            pairs = (d.join(k, F.col("dk") == F.col("kk"))
+                     .filter(F.col("dv") != F.col("kv"))
+                     .select(F.col("dv").alias("s"),
+                             F.col("kv").alias("o_lex")))
+            out.append(quads_of(pairs))
+    return _union(out)
 
 
 def _restriction_step(spark: SparkSession, delta: DataFrame, known: DataFrame,
@@ -427,12 +551,6 @@ def _restriction_step(spark: SparkSession, delta: DataFrame, known: DataFrame,
         return None
     g = F.lit(graph)
 
-    def nulls():
-        return [F.lit(None).cast("string").alias("o_dt"),
-                F.lit(None).cast("string").alias("o_lang"),
-                F.lit(None).cast("double").alias("o_num"),
-                F.lit(None).cast("timestamp").alias("o_ts")]
-
     def rels(df):
         return df.filter(F.col("o_dt").isNull()) \
                  .select(F.col("s").alias("u"), F.col("p").alias("rp"),
@@ -442,36 +560,82 @@ def _restriction_step(spark: SparkSession, delta: DataFrame, known: DataFrame,
         return df.filter(F.col("p") == RDF_TYPE) \
                  .select(F.col("s").alias("i"), F.col("o_lex").alias("c"))
 
-    out = None
-
-    def emit(piece):
-        nonlocal out
-        piece = piece.select(g.alias("g"), "s", F.lit(RDF_TYPE).alias("p"),
-                             "o_lex", *nulls()).select(*QUAD_COLS)
-        out = piece if out is None else out.unionByName(piece)
-
-    if schema.some_values:
-        sv_df = spark.createDataFrame(schema.some_values,
-                                      "v string, vp string, w string")
+    out = []
+    # rdfp15 matches type(x, w) and derives type(u, v); rdfp16 matches
+    # type(u, v) and derives type(x, w)
+    for table, typed_i, typed_c, new_s, new_o in (
+            (schema.some_values, "x", "w", "u", "v"),
+            (schema.all_values, "u", "v", "x", "w")):
+        if not table:
+            continue
+        tbl = spark.createDataFrame(table, "v string, vp string, w string")
         # delta rel × known types   +   known rels × delta types
         for rel_side, type_side in ((rels(delta), types(known)),
                                     (rels(known), types(delta))):
-            cand = rel_side.join(F.broadcast(sv_df),
-                                 rel_side["rp"] == sv_df["vp"])
-            hit = cand.join(type_side, (cand["x"] == type_side["i"])
-                            & (cand["w"] == type_side["c"]))
-            emit(hit.select(F.col("u").alias("s"), F.col("v").alias("o_lex")))
-    if schema.all_values:
-        av_df = spark.createDataFrame(schema.all_values,
-                                      "v string, vp string, w string")
-        for rel_side, type_side in ((rels(delta), types(known)),
-                                    (rels(known), types(delta))):
-            cand = rel_side.join(F.broadcast(av_df),
-                                 rel_side["rp"] == av_df["vp"])
-            hit = cand.join(type_side, (cand["u"] == type_side["i"])
-                            & (cand["v"] == type_side["c"]))
-            emit(hit.select(F.col("x").alias("s"), F.col("w").alias("o_lex")))
+            cand = rel_side.join(F.broadcast(tbl),
+                                 rel_side["rp"] == tbl["vp"])
+            hit = cand.join(type_side, (cand[typed_i] == type_side["i"])
+                            & (cand[typed_c] == type_side["c"]))
+            out.append(hit.select(
+                g.alias("g"), F.col(new_s).alias("s"),
+                F.lit(RDF_TYPE).alias("p"), F.col(new_o).alias("o_lex"),
+                *_null_object()).select(*QUAD_COLS))
+    return _union(out)
+
+
+def _index(pairs) -> dict:
+    out: dict = {}
+    for a, b in pairs:
+        out.setdefault(a, set()).add(b)
     return out
+
+
+def _driver_rule_step(schema: Schema):
+    """The driver rule table: the delta×TBox rules (rdfs2/3/7/9,
+    rdfp3/8/14a/14b) over the driver-closed TBox, as a generator
+    ``step(fact, typed=None)`` of the facts one fact derives. Facts are
+    ``(s, p, o_lex, o_dt, o_lang, o_num, o_ts)`` tuples.
+
+    ``typed(s, c)``, when given, yields the caller's own derivations from
+    ``type(s, c)`` right after rdfp14b. The rule order is fixed: a
+    worklist keeps the first shadow variant of each (s, p, o_lex) key, so
+    the order decides which one that is. The step is lazy, so a caller
+    that records each fact as it is yielded sees it in ``typed``."""
+    sc, sp = _index(schema.subclass), _index(schema.subprop)
+    dom, rng = _index(schema.domain), _index(schema.range)
+    inv, sym = _index(schema.inverse), schema.symmetric
+    hv_by_pval: dict = {}   # (p, o_lex, o_dt, o_lang) -> {restriction v}
+    hv_by_class: dict = {}  # v -> [(p, value-tuple)]
+    for v, p, val in schema.has_value:
+        hv_by_pval.setdefault((p, val[0], val[1], val[2]), set()).add(v)
+        hv_by_class.setdefault(v, []).append((p, val))
+
+    def step(fact, typed=None):
+        s, p, o_lex, o_dt, o_lang = fact[:5]
+        # rdfp14a: u p w (value match incl. literals) => type(u, v)
+        for v in hv_by_pval.get((p, o_lex, o_dt, o_lang), ()):
+            yield (s, RDF_TYPE, v) + _NULLS
+        if p == RDF_TYPE:
+            for c2 in sc.get(o_lex, ()):                    # rdfs9
+                yield (s, RDF_TYPE, c2) + _NULLS
+            # rdfp14b: type(u, v) & v hasValue w / onProperty p' => u p' w
+            for hp, val in hv_by_class.get(o_lex, ()):
+                yield (s, hp) + val
+            if typed is not None:
+                yield from typed(s, o_lex)
+        for p2 in sp.get(p, ()):                            # rdfs7
+            yield (s, p2) + fact[2:]                        # keeps shadows
+        for c in dom.get(p, ()):                            # rdfs2
+            yield (s, RDF_TYPE, c) + _NULLS
+        if o_dt is None:                                    # IRI object
+            for c in rng.get(p, ()):                        # rdfs3
+                yield (o_lex, RDF_TYPE, c) + _NULLS
+            for p2 in inv.get(p, ()):                       # rdfp8
+                yield (o_lex, p2, s) + _NULLS
+            if p in sym:                                    # rdfp3
+                yield (o_lex, p, s) + _NULLS
+
+    return step
 
 
 #: below this quad count the whole forward-chaining fixpoint runs on the
@@ -498,36 +662,14 @@ def _closure_small_abox(spark: SparkSession, rows, graph: str) -> DataFrame | No
 
     sch = Schema(tbox_rows=[
         r for r in rows
-        if (r["p"] in (SUBCLASS, SUBPROP, DOMAIN, RANGE, INVERSE,
-                       EQ_CLASS, EQ_PROP, RDF_TYPE,
-                       ON_PROPERTY, SOME_VALUES, ALL_VALUES)
-            and r["o_dt"] is None)
-        or r["p"] == HAS_VALUE])
-    sc_map: dict = {}
-    sp_map: dict = {}
-    dom_map: dict = {}
-    rng_map: dict = {}
-    inv_map: dict = {}
-    for a, b in sch.subclass:
-        sc_map.setdefault(a, set()).add(b)
-    for a, b in sch.subprop:
-        sp_map.setdefault(a, set()).add(b)
-    for a, b in sch.domain:
-        dom_map.setdefault(a, set()).add(b)
-    for a, b in sch.range:
-        rng_map.setdefault(a, set()).add(b)
-    for a, b in sch.inverse:
-        inv_map.setdefault(a, set()).add(b)
+        if _is_tbox(r["p"], r["o_lex"])
+        and (r["o_dt"] is None or r["p"] == HAS_VALUE)])
+    rule_step = _driver_rule_step(sch)
     trans_fwd: dict = {p: {} for p in sch.transitive}
     trans_bwd: dict = {p: {} for p in sch.transitive}
     func_vals: dict = {p: {} for p in sch.functional}      # p -> s -> {o}
     invfunc_subjs: dict = {p: {} for p in sch.inv_functional}  # p -> o -> {s}
-    # restriction-rule indexes (rdfp14a/b/15/16)
-    hv_by_pval: dict = {}   # (p, o_lex, o_dt, o_lang) -> {restriction v}
-    hv_by_class: dict = {}  # v -> [(p, value-tuple)]
-    for v, p, val in sch.has_value:
-        hv_by_pval.setdefault((p, val[0], val[1], val[2]), set()).add(v)
-        hv_by_class.setdefault(v, []).append((p, val))
+    # restriction-rule indexes (rdfp15/16)
     sv_by_prop: dict = {}   # p -> [(v, w)]
     sv_by_class: dict = {}  # w -> [(v, p)]
     for v, p, w in sch.some_values:
@@ -548,7 +690,6 @@ def _closure_small_abox(spark: SparkSession, rows, graph: str) -> DataFrame | No
     queue: deque = deque()
 
     def add(fact, base=False):
-        # fact = (s, p, o_lex, o_dt, o_lang, o_num, o_ts)
         key = fact[:3]
         if key in known:
             return
@@ -570,78 +711,58 @@ def _closure_small_abox(spark: SparkSession, rows, graph: str) -> DataFrame | No
             prop_fwd[p].setdefault(s, set()).add(o_lex)
             prop_bwd[p].setdefault(o_lex, set()).add(s)
 
+    def typed(s, c):
+        # rdfp15 (type side): x type w closes u p x chains into type(u,v)
+        for v, sp2 in sv_by_class.get(c, ()):
+            for u in prop_bwd.get(sp2, {}).get(s, ()):
+                yield (u, RDF_TYPE, v) + _NULLS
+        # rdfp16 (type side): u type v pushes w onto every u p x
+        for ap, w in av_by_class.get(c, ()):
+            for x in prop_fwd.get(ap, {}).get(s, ()):
+                yield (x, RDF_TYPE, w) + _NULLS
+
     for r in rows:
         add((r["s"], r["p"], r["o_lex"], r["o_dt"], r["o_lang"],
              r["o_num"], r["o_ts"]), base=True)
 
-    nulls = (None, None, None, None)
     while queue:
         if len(inferred) > SMALL_ABOX_MAX_INFERRED:
             return None
-        s, p, o_lex, o_dt, o_lang, o_num, o_ts = queue.popleft()
-        is_iri = o_dt is None
-        # rdfp14a: u p w (value match incl. literals) => type(u, v)
-        for v in hv_by_pval.get((p, o_lex, o_dt, o_lang), ()):
-            add((s, RDF_TYPE, v) + nulls)
-        # rdfs9: type(x,c1) & sc(c1,c2) => type(x,c2)
-        if p == RDF_TYPE:
-            for c2 in sc_map.get(o_lex, ()):
-                add((s, RDF_TYPE, c2) + nulls)
-            # rdfp14b: type(u, v) & v hasValue w / onProperty p' => u p' w
-            for hp, val in hv_by_class.get(o_lex, ()):
-                add((s, hp) + val)
-            # rdfp15 (type side): x type w closes u p x chains into type(u,v)
-            for v, sp2 in sv_by_class.get(o_lex, ()):
-                for u in prop_bwd.get(sp2, {}).get(s, ()):
-                    add((u, RDF_TYPE, v) + nulls)
-            # rdfp16 (type side): u type v pushes w onto every u p x
-            for ap, w in av_by_class.get(o_lex, ()):
-                for x in prop_fwd.get(ap, {}).get(s, ()):
-                    add((x, RDF_TYPE, w) + nulls)
-        # rdfs7: rel(s,p1,o) & sp(p1,p2) => rel(s,p2,o) (keeps literal shadow)
-        for p2 in sp_map.get(p, ()):
-            add((s, p2, o_lex, o_dt, o_lang, o_num, o_ts))
-        # rdfs2: rel(s,p,o) & dom(p,c) => type(s,c)
-        for c in dom_map.get(p, ()):
-            add((s, RDF_TYPE, c) + nulls)
-        if is_iri:
-            # rdfs3: rng    rdfp8: inverseOf    rdfp3: symmetric
-            for c in rng_map.get(p, ()):
-                add((o_lex, RDF_TYPE, c) + nulls)
-            for p2 in inv_map.get(p, ()):
-                add((o_lex, p2, s) + nulls)
-            if p in sch.symmetric:
-                add((o_lex, p, s) + nulls)
-            # rdfp4: chain through the current closure on both sides
-            if p in trans_fwd:
-                for x in list(trans_fwd[p].get(o_lex, ())):
-                    add((s, p, x) + nulls)
-                for y in list(trans_bwd[p].get(s, ())):
-                    add((y, p, o_lex) + nulls)
-            # rdfp1: functional — colliding values are sameAs
-            if p in func_vals:
-                for other in list(func_vals[p].get(s, ())):
-                    if other != o_lex:
-                        add((o_lex, SAMEAS, other) + nulls)
-                        add((other, SAMEAS, o_lex) + nulls)
-            # rdfp2: inverse-functional — colliding subjects are sameAs
-            if p in invfunc_subjs:
-                for other in list(invfunc_subjs[p].get(o_lex, ())):
-                    if other != s:
-                        add((s, SAMEAS, other) + nulls)
-                        add((other, SAMEAS, s) + nulls)
-            # rdfp15 (rel side): u p x & x type w => type(u, v)
-            if p in sv_by_prop:
-                for v, w in sv_by_prop[p]:
-                    if w in types_of.get(o_lex, ()):
-                        add((s, RDF_TYPE, v) + nulls)
-            # rdfp16 (rel side): u p x & u type v => type(x, w)
-            if p in av_by_prop:
-                for v, w in av_by_prop[p]:
-                    if v in types_of.get(s, ()):
-                        add((o_lex, RDF_TYPE, w) + nulls)
+        fact = queue.popleft()
+        for derived in rule_step(fact, typed):
+            add(derived)
+        s, p, o_lex, o_dt = fact[:4]
+        if o_dt is not None:
+            continue
+        # rdfp4: chain through the current closure on both sides
+        if p in trans_fwd:
+            for x in list(trans_fwd[p].get(o_lex, ())):
+                add((s, p, x) + _NULLS)
+            for y in list(trans_bwd[p].get(s, ())):
+                add((y, p, o_lex) + _NULLS)
+        # rdfp1: functional — colliding values are sameAs
+        if p in func_vals:
+            for other in list(func_vals[p].get(s, ())):
+                if other != o_lex:
+                    add((o_lex, SAMEAS, other) + _NULLS)
+                    add((other, SAMEAS, o_lex) + _NULLS)
+        # rdfp2: inverse-functional — colliding subjects are sameAs
+        if p in invfunc_subjs:
+            for other in list(invfunc_subjs[p].get(o_lex, ())):
+                if other != s:
+                    add((s, SAMEAS, other) + _NULLS)
+                    add((other, SAMEAS, s) + _NULLS)
+        # rdfp15 (rel side): u p x & x type w => type(u, v)
+        if p in sv_by_prop:
+            for v, w in sv_by_prop[p]:
+                if w in types_of.get(o_lex, ()):
+                    add((s, RDF_TYPE, v) + _NULLS)
+        # rdfp16 (rel side): u p x & u type v => type(x, w)
+        if p in av_by_prop:
+            for v, w in av_by_prop[p]:
+                if v in types_of.get(s, ()):
+                    add((o_lex, RDF_TYPE, w) + _NULLS)
 
-    from graphdb_free_mocha_sa_spark.model import QUAD_SCHEMA
     out_rows = [(graph,) + f for f in inferred]
     return spark.createDataFrame(out_rows, QUAD_SCHEMA) if out_rows \
         else spark.createDataFrame([], QUAD_SCHEMA)
@@ -679,7 +800,6 @@ def _closure_body(spark: SparkSession, quads: DataFrame,
                   graph: str, n_probe: int | None = None) -> DataFrame:
     schema = Schema(quads)
     g = F.lit(graph)
-    apply_rules = _rule_applier(spark, schema, graph)
 
     # transitive properties: closure per property via the path engine
     trans_pieces: list[DataFrame] = []
@@ -703,12 +823,6 @@ def _closure_body(spark: SparkSession, quads: DataFrame,
     if n_probe < _CLOSURE_SMALL_PARTS_ROWS:
         known = known.repartition(4)
     known = known.localCheckpoint()
-    # `known` accumulates as a LAZY union of pinned pieces (r11 opt,
-    # guide §2.4): the old per-iteration known.unionByName(new)
-    # .localCheckpoint() re-materialized the ENTIRE known set every
-    # iteration — O(closure) copied per step, and at cluster scale a
-    # full-store copy per iteration. Each piece is itself checkpointed,
-    # so scanning the union reads pinned blocks without recomputation.
     # One-shot fixpoint (r12 opt): when the only rules are rdfs2/3/7/9
     # over the driver-CLOSED subclass/subprop relations — no transitive /
     # functional / restriction / inverse / symmetric / hasValue machinery,
@@ -740,43 +854,12 @@ def _closure_body(spark: SparkSession, quads: DataFrame,
         schema = _copy.copy(schema)
         schema.domain = _compose(schema.domain)
         schema.range = _compose(schema.range)
-        apply_rules = _rule_applier(spark, schema, graph)
 
-    known_parts = [known]
-    inferred = None
-    delta = known
-    for i in range(MAX_ITERS):
-        new = apply_rules(delta)
-        if trans_pieces and i == 0:
-            for tp in trans_pieces:
-                new = new.unionByName(tp)
-        elif i > 0:
-            # rdfp4 completeness: transitive-property edges DERIVED during the
-            # fixpoint (via subPropertyOf/inverseOf/symmetry) must keep
-            # chaining — mirror owl_horst_increment's per-iteration step
-            ts = _trans_step(delta, known, schema.transitive, graph)
-            if ts is not None:
-                new = new.unionByName(ts)
-        fs = _functional_step(delta, known, schema, graph)
-        if fs is not None:
-            new = new.unionByName(fs)
-        rs = _restriction_step(spark, delta, known, schema, graph)
-        if rs is not None:
-            new = new.unionByName(rs)
-        new = _anti_known(new, known).localCheckpoint()
-        if new.isEmpty():
-            break
-        inferred = new if inferred is None else inferred.unionByName(new)
-        if one_shot:
-            break                # composed rules are complete in one step
-        known_parts.append(new)
-        known = known_parts[0]
-        for kp in known_parts[1:]:
-            known = known.unionByName(kp)
-        delta = new
-    else:
-        raise RuntimeError(f"inference did not converge in {MAX_ITERS} iterations")
-
+    # rdfp4 completeness: the first round chains with the path-engine
+    # closures; later rounds chain transitive-property edges DERIVED during
+    # the fixpoint (via subPropertyOf/inverseOf/symmetry) semi-naively
+    inferred = _fixpoint(_rule_step(spark, schema, graph), known, known,
+                         first_trans=_union(trans_pieces), one_shot=one_shot)
     if inferred is None:
         return spark.createDataFrame([], quads.schema).select(*QUAD_COLS)
     # Pin the final closure (r11 opt, guide §5): the result used to escape
@@ -784,12 +867,7 @@ def _closure_body(spark: SparkSession, quads: DataFrame,
     # later reader (each query over df_with_inference, every DRed scan of
     # `inferred`) re-ran that shuffle. One materialization here, memory
     # scans everywhere after.
-    return (inferred.dropDuplicates(["s", "p", "o_lex", "o_dt", "o_lang"])
-            .localCheckpoint())
-
-
-TBOX_PREDS = (SUBCLASS, SUBPROP, DOMAIN, RANGE, INVERSE, EQ_CLASS, EQ_PROP,
-              ON_PROPERTY, HAS_VALUE, SOME_VALUES, ALL_VALUES)
+    return inferred.dropDuplicates(_KEY5).localCheckpoint()
 
 
 def owl_horst_increment(spark: SparkSession, base: DataFrame,
@@ -806,12 +884,7 @@ def owl_horst_increment(spark: SparkSession, base: DataFrame,
     Work per micro-batch is proportional to the delta's consequences, never
     to the full ABox.
     """
-    tbox_delta = delta.filter(
-        F.col("p").isin(*TBOX_PREDS)
-        | ((F.col("p") == RDF_TYPE)
-           & F.col("o_lex").isin(TRANSITIVE, SYMMETRIC,
-                                 FUNCTIONAL, INV_FUNCTIONAL)))
-    if not tbox_delta.isEmpty():
+    if _touches_tbox(delta):
         return None
     with _no_constraint_propagation(spark):
         return _increment_body(spark, base, inferred, delta, graph)
@@ -824,37 +897,12 @@ def _increment_body(spark: SparkSession, base: DataFrame,
     if inferred is not None:
         known = known.unionByName(inferred.select(*QUAD_COLS))
     schema = Schema(known)
-    apply_rules = _rule_applier(spark, schema, graph)
-
-    new_inferred = None
     d = delta.select(*QUAD_COLS).localCheckpoint()
     # the delta facts are part of the known world (delta×delta chains must
-    # resolve, and delta facts themselves are base data, not inferences).
-    # `known` grows as a LAZY union of the (lazy) base world plus PINNED
-    # per-iteration deltas (r11 opt, guide §2.4): the old
-    # known.unionByName(new).localCheckpoint() per iteration copied the
-    # whole base ∪ closure every step — a full-store materialization per
-    # micro-batch iteration at cluster scale.
-    known = known.unionByName(d)
-    for _ in range(MAX_ITERS):
-        new = apply_rules(d)
-        ts = _trans_step(d, known, schema.transitive, graph)
-        if ts is not None:
-            new = new.unionByName(ts)
-        fs = _functional_step(d, known, schema, graph)
-        if fs is not None:
-            new = new.unionByName(fs)
-        rs = _restriction_step(spark, d, known, schema, graph)
-        if rs is not None:
-            new = new.unionByName(rs)
-        new = _anti_known(new, known).localCheckpoint()
-        if new.isEmpty():
-            return new_inferred
-        new_inferred = (new if new_inferred is None
-                        else new_inferred.unionByName(new))
-        known = known.unionByName(new)
-        d = new
-    raise RuntimeError(f"incremental inference did not converge in {MAX_ITERS} iterations")
+    # resolve, and delta facts themselves are base data, not inferences);
+    # the base world stays lazy
+    return _fixpoint(_rule_step(spark, schema, graph), d,
+                     known.unionByName(d))
 
 
 def _anti_known_bigside(new: DataFrame, known: DataFrame) -> DataFrame:
@@ -862,8 +910,7 @@ def _anti_known_bigside(new: DataFrame, known: DataFrame) -> DataFrame:
     the big side — probe `known` with the broadcast keys instead, then
     broadcast-anti the (small) present set. Two scans of `known`'s plan,
     zero shuffles of it."""
-    new = new.dropDuplicates(["s", "p", "o_lex", "o_dt", "o_lang"]) \
-             .localCheckpoint()
+    new = new.dropDuplicates(_KEY5).localCheckpoint()
     keys = new.select("s", "p", "o_lex").dropDuplicates()
     # pres has exactly ONE consumer (the broadcast build of the anti join
     # below) — no checkpoint needed; it computes inline as that join's
@@ -917,22 +964,11 @@ def owl_horst_decrement(spark: SparkSession, base_after: DataFrame,
     # the collected rows (replacing a distributed isEmpty job) and the rows
     # seed the driver-side cone fixpoint in _decrement_body. Above the
     # bound, the distributed probe + loop run exactly as before.
-    d_rows = driver_rows(deleted.select("s", "p", "o_lex", "o_dt", "o_lang"),
-                         DRED_TERMS_BOUND)
+    d_rows = driver_rows(deleted.select(*QUAD_COLS[1:]), DRED_TERMS_BOUND)
     if d_rows is not None:
         d_rows = [tuple(r) for r in d_rows]
-        markers = (TRANSITIVE, SYMMETRIC, FUNCTIONAL, INV_FUNCTIONAL)
-        if any(p in TBOX_PREDS or (p == RDF_TYPE and ol in markers)
-               for (_, p, ol, _, _) in d_rows):
-            return None
-    else:
-        tbox_delta = deleted.filter(
-            F.col("p").isin(*TBOX_PREDS)
-            | ((F.col("p") == RDF_TYPE)
-               & F.col("o_lex").isin(TRANSITIVE, SYMMETRIC,
-                                     FUNCTIONAL, INV_FUNCTIONAL)))
-        if not tbox_delta.isEmpty():
-            return None
+    if _touches_tbox(deleted, d_rows):
+        return None
     with _no_constraint_propagation(spark):
         return _decrement_body(spark, base_after, inferred, deleted, graph,
                                d_rows)
@@ -951,14 +987,12 @@ def _driver_cone_rules_ok(schema: Schema) -> bool:
 
 def _driver_cone(schema: Schema, seed_rows, bound: int):
     """Driver-side over-delete cone (r12 opt, VERDICT r11 item 4): the set
-    of ``(s, p, o_lex, o_dt, o_lang)`` facts derivable from the deleted
-    seed by the delta-only Horst rules under the driver-closed TBox — the
-    exact rule mirror of :func:`_rule_applier` restricted to the rules
-    :func:`_driver_cone_rules_ok` admits. Because ``schema.subclass`` /
-    ``subprop`` are transitively closed, the fixpoint depth is the RULE
-    INTERACTION depth (typically 1-2), not the hierarchy depth, and it
-    runs in Python sets — zero Spark jobs. The caller probes the closure
-    ONCE with the final key set.
+    of facts derivable from the deleted seed by :func:`_driver_rule_step`,
+    the rules :func:`_driver_cone_rules_ok` admits. Because
+    ``schema.subclass`` / ``subprop`` are transitively closed, the
+    fixpoint depth is the RULE INTERACTION depth (typically 1-2), not the
+    hierarchy depth, and it runs in Python sets — zero Spark jobs. The
+    caller probes the closure ONCE with the final key set.
 
     Sound over-approximation: propagation follows the true derivation
     chain (exact shadow variants), including through facts that happen to
@@ -967,51 +1001,7 @@ def _driver_cone(schema: Schema, seed_rows, bound: int):
     fact (each premise shares a term with its conclusion). Returns None
     when the cone outgrows ``bound`` (fall back to the distributed loop).
     """
-    sc: dict = {}
-    for a, b in schema.subclass:
-        sc.setdefault(a, []).append(b)
-    sp: dict = {}
-    for a, b in schema.subprop:
-        sp.setdefault(a, []).append(b)
-    dom: dict = {}
-    for a, b in schema.domain:
-        dom.setdefault(a, []).append(b)
-    rng: dict = {}
-    for a, b in schema.range:
-        rng.setdefault(a, []).append(b)
-    inv: dict = {}
-    for a, b in schema.inverse:
-        inv.setdefault(a, []).append(b)
-    sym = schema.symmetric
-    hv_fwd: dict = {}   # (p, w_lex, w_dt, w_lang) -> [v]     (rdfp14a)
-    hv_bwd: dict = {}   # v -> [(p, w_lex, w_dt, w_lang)]     (rdfp14b)
-    for (v, p, val) in schema.has_value:
-        hv_fwd.setdefault((p, val[0], val[1], val[2]), []).append(v)
-        hv_bwd.setdefault(v, []).append((p, val[0], val[1], val[2]))
-
-    def step(f):
-        s, p, ol, od, olng = f
-        out = []
-        if p == RDF_TYPE:
-            for c2 in sc.get(ol, ()):                       # rdfs9
-                out.append((s, RDF_TYPE, c2, None, None))
-            for (hp, wl, wd, wlg) in hv_bwd.get(ol, ()):    # rdfp14b
-                out.append((s, hp, wl, wd, wlg))
-        for p2 in sp.get(p, ()):                            # rdfs7
-            out.append((s, p2, ol, od, olng))
-        for c in dom.get(p, ()):                            # rdfs2
-            out.append((s, RDF_TYPE, c, None, None))
-        if od is None:                                      # IRI object
-            for c in rng.get(p, ()):                        # rdfs3
-                out.append((ol, RDF_TYPE, c, None, None))
-            for p2 in inv.get(p, ()):                       # rdfp8
-                out.append((ol, p2, s, None, None))
-            if p in sym:                                    # rdfp3
-                out.append((ol, p, s, None, None))
-        for v in hv_fwd.get((p, ol, od, olng), ()):         # rdfp14a
-            out.append((s, RDF_TYPE, v, None, None))
-        return out
-
+    step = _driver_rule_step(schema)
     facts = set(seed_rows)
     frontier = list(facts)
     derived: set = set()
@@ -1042,54 +1032,13 @@ def _decrement_body(spark: SparkSession, base_after: DataFrame,
     # union members (observed on 4.1); the members are checkpointed
     old_known = base_after.unionByName(inferred).unionByName(d)
     schema = Schema(old_known)          # TBox unchanged by this delete
-    apply_rules = _rule_applier(spark, schema, graph)
+    step = _rule_step(spark, schema, graph)
 
     def one_step(delta: DataFrame, known: DataFrame,
                  both_sides: bool = False) -> DataFrame:
-        new = apply_rules(delta)
-        ts = _trans_step(delta, known, schema.transitive, graph)
-        if ts is not None:
-            new = new.unionByName(ts)
-        if both_sides and schema.transitive:
-            # over-delete accelerator: a deleted transitive edge's cone is
-            # known* ⋈ d ⋈ known* — computing the BOTH-side extension in
-            # one pass collapses the semi-naive loop from O(chain) to 2
-            # iterations (the closure contains every sub-chain, so the
-            # one-hop-each-side join over the closure reaches every
-            # crossing pair)
-            g_l = F.lit(graph)
-            for p in sorted(schema.transitive):
-                dd = delta.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                    .select(F.col("s").alias("ds"), F.col("o_lex").alias("do"))
-                k = known.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                    .select(F.col("s").alias("ks"), F.col("o_lex").alias("ko"))
-                k2 = k.select(F.col("ks").alias("ks2"),
-                              F.col("ko").alias("ko2"))
-                both = (k.join(dd, F.col("ko") == F.col("ds"))
-                        .join(k2, F.col("do") == F.col("ks2"))
-                        .select(g_l.alias("g"), F.col("ks").alias("s"),
-                                F.lit(p).alias("p"),
-                                F.col("ko2").alias("o_lex"),
-                                F.lit(None).cast("string").alias("o_dt"),
-                                F.lit(None).cast("string").alias("o_lang"),
-                                F.lit(None).cast("double").alias("o_num"),
-                                F.lit(None).cast("timestamp").alias("o_ts"))
-                        .select(*QUAD_COLS))
-                new = new.unionByName(both)
-        fs = _functional_step(delta, known, schema, graph)
-        if fs is not None:
-            new = new.unionByName(fs)
-        rs = _restriction_step(spark, delta, known, schema, graph)
-        if rs is not None:
-            new = new.unionByName(rs)
-        return new.dropDuplicates(["s", "p", "o_lex", "o_dt", "o_lang"])
-
-    def _pin(df: DataFrame) -> DataFrame:
-        # re-alias every column (fresh expression ids) before pinning:
-        # Spark 4.1's Union constraint rewrite throws "key not found" when
-        # a union of checkpointed frames re-uses attribute ids
-        return df.select([F.col(c).alias(c) for c in df.columns]) \
-                 .localCheckpoint()
+        trans = (_trans_step(delta, known, schema.transitive, graph,
+                             both_sides=True) if both_sides else None)
+        return step(delta, known, trans).dropDuplicates(_KEY5)
 
     # ---- 1. over-delete fixpoint (cone of the deleted premises).
     # `over` accumulates as a LAZY union of pinned pieces (r11 opt,
@@ -1111,7 +1060,7 @@ def _decrement_body(spark: SparkSession, base_after: DataFrame,
         cone = _driver_cone(schema, d_rows, DRED_TERMS_BOUND)
     if cone is not None:
         over = None
-        keys = sorted({(s, p, ol) for (s, p, ol, _, _) in cone})
+        keys = sorted({f[:3] for f in cone})
         if keys:
             ck = spark.createDataFrame(keys,
                                        "s string, p string, o_lex string")
@@ -1120,10 +1069,8 @@ def _decrement_body(spark: SparkSession, base_after: DataFrame,
             if not cons.isEmpty():
                 over = cons
         return _rederive(spark, base_after, inferred, deleted, graph,
-                         schema, one_step, _pin, over,
-                         cone_rows=cone, d_rows=d_rows)
+                         one_step, over, cone_rows=cone, d_rows=d_rows)
 
-    over_parts: list[DataFrame] = []
     over = None
     over_keys: set | None = set()
     for _ in range(MAX_ITERS):
@@ -1164,21 +1111,18 @@ def _decrement_body(spark: SparkSession, base_after: DataFrame,
                              "left_semi").localCheckpoint()
         if cons.isEmpty():
             break
-        over_parts.append(cons)
-        over = over_parts[0]
-        for op_ in over_parts[1:]:
-            over = over.unionByName(op_)
+        over = cons if over is None else over.unionByName(cons)
         d = cons
     else:
         raise RuntimeError(
             f"DRed over-delete did not converge in {MAX_ITERS} iterations")
     return _rederive(spark, base_after, inferred, deleted, graph,
-                     schema, one_step, _pin, over)
+                     one_step, over)
 
 
 def _rederive(spark: SparkSession, base_after: DataFrame,
               inferred: DataFrame, deleted: DataFrame, graph: str,
-              schema: Schema, one_step, _pin, over: DataFrame | None,
+              one_step, over: DataFrame | None,
               cone_rows=None, d_rows=None) -> DataFrame:
     if over is None:
         remaining = inferred
@@ -1216,15 +1160,14 @@ def _rederive(spark: SparkSession, base_after: DataFrame,
     # driver collects.
     if cone_rows is not None:
         drows = list(cone_rows) + list(d_rows or [])
-        s_terms = sorted({s for (s, _, _, _, _) in drows})
-        all_terms = sorted({t for (s, _, ol, _, _) in drows
-                            for t in (s, ol)})
+        s_terms = sorted({f[0] for f in drows})
+        all_terms = sorted({t for f in drows for t in (f[0], f[2])})
         cand = new_known.filter(
             F.col("s").isin(all_terms)
             | (F.col("o_lex").isin(s_terms) if s_terms else F.lit(False)))
         cand = _pin(cand)
         return _rederive_tail(spark, base_after, remaining, new_known,
-                              cand, graph, one_step, _pin)
+                              cand, graph, one_step)
     terms = (removed.select(F.col("s").alias("t"))
              .unionByName(removed.filter(F.col("o_dt").isNull())
                           .select(F.col("o_lex").alias("t")))
@@ -1267,12 +1210,12 @@ def _rederive(spark: SparkSession, base_after: DataFrame,
     # 15.2 s of the 19.5 s decrement; 2.6 s after the pin)
     cand = _pin(cand)
     return _rederive_tail(spark, base_after, remaining, new_known, cand,
-                          graph, one_step, _pin)
+                          graph, one_step)
 
 
 def _rederive_tail(spark: SparkSession, base_after: DataFrame,
                    remaining: DataFrame, new_known: DataFrame,
-                   cand: DataFrame, graph: str, one_step, _pin) -> DataFrame:
+                   cand: DataFrame, graph: str, one_step) -> DataFrame:
     restored = _pin(_anti_known_bigside(one_step(cand, new_known),
                                         new_known))
     if restored.isEmpty():
@@ -1283,16 +1226,15 @@ def _rederive_tail(spark: SparkSession, base_after: DataFrame,
     if more is not None and not more.isEmpty():
         out = out.unionByName(
             _anti_known(more, base_after.unionByName(out)))
-    return _pin(out.dropDuplicates(["s", "p", "o_lex", "o_dt", "o_lang"]))
+    return _pin(out.dropDuplicates(_KEY5))
 
 
 def pin_inference(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """localCheckpoint an inferred frame with constraint propagation off
+    """:func:`_pin` an inferred frame with constraint propagation off
     (same Spark 4.1 Union-rewrite hazard as inside the decrement — the
     frame may be a stack of anti-joins over checkpointed members)."""
     with _no_constraint_propagation(spark):
-        return df.select([F.col(c).alias(c) for c in df.columns]) \
-                 .localCheckpoint()
+        return _pin(df)
 
 
 def expand_sameas(quads: DataFrame, comp: DataFrame) -> DataFrame:
@@ -1372,6 +1314,29 @@ def sameas_components(spark: SparkSession, quads: DataFrame,
     return comp
 
 
+def _min_label_classes(edges) -> dict:
+    """Union-find over ``(a, b)`` edges: ``{canon: [members]}``, each
+    class labelled by its least member — the label the distributed
+    min-label fixpoint converges to."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    comp: dict = {}
+    for x in parent:
+        comp.setdefault(find(x), []).append(x)
+    return {min(mem): mem for mem in comp.values()}
+
+
 def _sameas_labels(spark: SparkSession, quads: DataFrame,
                    seed: DataFrame | None = None,
                    small_path: bool = True) -> tuple[DataFrame, int]:
@@ -1391,26 +1356,8 @@ def _sameas_labels(spark: SparkSession, quads: DataFrame,
         # fall through to the checkpointed fixpoint
         rows = driver_rows(edges, SMALL_CC_EDGES)
         if rows is not None:
-            parent: dict = {}
-
-            def find(x):
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for r in rows:
-                ra, rb = find(r["a"]), find(r["b"])
-                if ra != rb:
-                    parent[ra] = rb
-            comp: dict = {}
-            for x in parent:
-                comp.setdefault(find(x), []).append(x)
-            out = []
-            for members in comp.values():
-                c = min(members)              # min-label, as the fixpoint
-                out.extend((m, c) for m in members)
+            classes = _min_label_classes((r["a"], r["b"]) for r in rows)
+            out = [(m, c) for c, mem in classes.items() for m in mem]
             return spark.createDataFrame(out, "term string, canon string"), 0
     edges = edges.localCheckpoint()   # pin: re-read every fixpoint iter
     labels = (edges.select(F.col("a").alias("term"))
@@ -1525,34 +1472,14 @@ def collect_gate_state(spark: SparkSession, quads: DataFrame):
         .select("p", "s", "o_lex"), GATE_STATE_BOUND)
     if rows is None:
         return None
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
     pairs = {DISJOINT: set(), COMPLEMENT: set()}
     for r in rows:
-        if r["p"] == SAMEAS:
-            ra, rb = find(r["s"]), find(r["o_lex"])
-            if ra != rb:
-                parent[ra] = rb
-        else:
+        if r["p"] != SAMEAS:
             a, b = r["s"], r["o_lex"]
             pairs[r["p"]].add((a, b) if a <= b else (b, a))
-    comp: dict = {}
-    for x in list(parent):
-        comp.setdefault(find(x), []).append(x)
-    canon: dict = {}
-    members: dict = {}
-    for mem in comp.values():
-        c = min(mem)                    # min-label, as sameas_components
-        members[c] = mem
-        for m in mem:
-            canon[m] = c
+    members = _min_label_classes((r["s"], r["o_lex"]) for r in rows
+                                 if r["p"] == SAMEAS)
+    canon = {m: c for c, mem in members.items() for m in mem}
     return {"canon": canon, "members": members, "pairs": pairs}
 
 

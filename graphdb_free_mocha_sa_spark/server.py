@@ -137,9 +137,7 @@ def serve(engine: Engine, port: int = 7200) -> "HTTPServer":
     class Handler(BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"
 
-        def do_POST(self):  # noqa: N802
-            n = int(self.headers.get("Content-Length", 0))
-            body = self.rfile.read(n).decode("utf-8")
+        def _stream(self, body: str, content_type: str = "") -> None:
             # chunked transfer-encoding: result bytes stream straight from
             # toLocalIterator to the socket — the endpoint never holds the
             # result set (B51/B52 bounded leg). start() fires before the
@@ -160,14 +158,17 @@ def serve(engine: Engine, port: int = 7200) -> "HTTPServer":
                     self.wfile.write(b"%x\r\n" % len(data) + data + b"\r\n")
 
             try:
-                handle_request_stream(
-                    engine, body, write,
-                    self.headers.get("Content-Type", ""), start=start,
-                    fmt=fmt)
+                handle_request_stream(engine, body, write, content_type,
+                                      start=start, fmt=fmt)
             except Exception:  # noqa: BLE001 — 500 if nothing sent yet
                 if not started:
                     start(500)
             self.wfile.write(b"0\r\n\r\n")
+
+        def do_POST(self):  # noqa: N802
+            n = int(self.headers.get("Content-Length", 0))
+            self._stream(self.rfile.read(n).decode("utf-8"),
+                         self.headers.get("Content-Type", ""))
 
         def do_GET(self):  # noqa: N802 — SPARQL protocol §2.1.1: GET ?query=
             from urllib.parse import urlsplit
@@ -177,28 +178,7 @@ def serve(engine: Engine, port: int = 7200) -> "HTTPServer":
                 self.send_header("Content-Length", "0")
                 self.end_headers()
                 return
-            started = []
-            fmt = negotiate_format(self.headers.get("Accept", ""))
-
-            def start(code: int, used_fmt: str = "json") -> None:
-                started.append(code)
-                self.send_response(code)
-                self.send_header("Content-Type", _FMT_CONTENT_TYPE[used_fmt])
-                self.send_header("Transfer-Encoding", "chunked")
-                self.end_headers()
-
-            def write(chunk: str) -> None:
-                data = chunk.encode("utf-8")
-                if data:
-                    self.wfile.write(b"%x\r\n" % len(data) + data + b"\r\n")
-
-            try:
-                handle_request_stream(engine, qs["query"][0], write,
-                                      start=start, fmt=fmt)
-            except Exception:  # noqa: BLE001
-                if not started:
-                    start(500)
-            self.wfile.write(b"0\r\n\r\n")
+            self._stream(qs["query"][0])
 
         def log_message(self, *args):  # quiet
             pass

@@ -141,20 +141,20 @@ def _quads_from_artifact_or_build(spark: SparkSession, sf_dir: str) -> DataFrame
     from graphdb_free_mocha_sa_spark import cache as C
     qpath = os.path.join(C.artifact_dir(sf_dir), "quads")
     try:
-        if C.is_published(qpath):
-            # the artifact may be a POINTER at the durable store's bucketed
-            # base (one physical copy of the quads on disk — r12 opt)
-            return spark.read.parquet(C.read_pointer(qpath) or qpath)
+        # the artifact may be a POINTER at the durable store's bucketed
+        # base (one physical copy of the quads on disk — r12 opt); a
+        # dangling one is removed and rebuilt below
+        src = C.published_source(qpath)
+        if src:
+            return spark.read.parquet(src)
     except Exception:
         pass
     quads = _build_quads(spark, sf_dir)
     try:
         tmp = C.scratch_dir(qpath)
         quads.write.mode("overwrite").parquet(tmp)
-        if C.publish(tmp, qpath):
-            return spark.read.parquet(qpath)
-        if C.is_published(qpath):
-            return spark.read.parquet(C.read_pointer(qpath) or qpath)
+        if C.publish(tmp, qpath):       # ours, or a concurrent winner's
+            return spark.read.parquet(C.published_source(qpath) or qpath)
     except Exception:
         pass                     # unwritable cache dir → stay on the lineage
     return quads

@@ -114,3 +114,25 @@ def test_pointer_survives_cache_root_move(tmp_path, monkeypatch):
     (legacy / "_POINTER").write_text(str(moved / "elsewhere") + "\n")
     assert C.read_pointer(str(legacy)) == str(moved / "elsewhere")
     assert C.read_pointer(str(moved / "sfX-aaaa" / "store")) is None
+
+
+def test_dangling_pointer_is_republished(spark, tmp_path, monkeypatch):
+    """A quad-view pointer whose target is gone is replaced on open: the
+    first open rebuilds and publishes a plain artifact, and the second
+    open reads that published, live copy instead of rebuilding again."""
+    from graphdb_free_mocha_sa_spark.sources.registry import \
+        _quads_from_artifact_or_build
+    from tests.conftest import SF_DIR as sf
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
+    qpath = os.path.join(C.artifact_dir(sf), "quads")
+    target = os.path.join(C.artifact_dir(sf), "store", "base-1")
+    os.makedirs(target)
+    assert C.publish_pointer(target, qpath)
+    os.rmdir(target)
+
+    first = _quads_from_artifact_or_build(spark, sf)
+    assert C.is_published(qpath) and C.read_pointer(qpath) is None
+    second = _quads_from_artifact_or_build(spark, sf)
+    files = second.inputFiles()
+    assert files and all(os.path.abspath(qpath) in f for f in files)
+    assert second.count() == first.count() > 0

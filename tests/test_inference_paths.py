@@ -281,8 +281,21 @@ def test_random_closure_worklist_vs_distributed_equivalence(spark, monkeypatch):
     """Differential property test: on RANDOM TBox+ABox mixes (subclass/
     subproperty/domain/range/transitive/symmetric/inverse/equivalent/
     functional/restriction vocabulary), the driver-side worklist closure
-    and the distributed DataFrame fixpoint must derive the SAME fact set."""
+    and the distributed DataFrame fixpoint must derive the SAME fact set.
+    On the first graph, maintaining the distributed closure through an
+    ABox insert (owl_horst_increment) or delete (owl_horst_decrement) of a
+    few triples must give the world that re-closing from scratch gives.
+    The reference closures come from the worklist, which is checked
+    against the distributed fixpoint first. One graph only: the
+    distributed DRed delete alone takes 200-330 Spark jobs here.
+
+    The distributed closures and the two maintenance checks run on a
+    thread pool over the one session: each is a chain of small Spark jobs
+    whose time is mostly driver-side planning and scheduling, so they
+    overlap on a few cores instead of queueing behind one another."""
     import random
+    from concurrent.futures import ThreadPoolExecutor
+
     from graphdb_free_mocha_sa_spark.operators import inference
 
     ONP, HV = OWL + "onProperty", OWL + "hasValue"
@@ -291,6 +304,13 @@ def test_random_closure_worklist_vs_distributed_equivalence(spark, monkeypatch):
     classes = [f"urn:C{i}" for i in range(6)]
     props = [f"urn:p{i}" for i in range(5)]
     nodes = [f"urn:n{i}" for i in range(10)]
+
+    def world(*frames):
+        return {(r_.s, r_.p, r_.o_lex)
+                for df in frames if df is not None
+                for r_ in df.collect()}
+
+    graphs = []
     for trial in range(3):
         triples = []
         for _ in range(4):
@@ -307,22 +327,63 @@ def test_random_closure_worklist_vs_distributed_equivalence(spark, monkeypatch):
         triples += [(r, ONP, rng.choice(props)),
                     (rng.choice([r]), rng.choice([HV, SVF, AVF]),
                      rng.choice(nodes if rng.random() < 0.5 else classes))]
+        n_tbox = len(triples)
         for _ in range(25):
             triples.append((rng.choice(nodes), rng.choice(props),
                             rng.choice(nodes)))
         for _ in range(8):
             triples.append((rng.choice(nodes), RDF_TYPE, rng.choice(classes)))
-        quads = mk_quads(spark, list(dict.fromkeys(triples)))
+        base = list(dict.fromkeys(triples))
+        quads = mk_quads(spark, base)
+        graphs.append((base, quads,
+                       world(inference.owl_horst_closure(spark, quads))))
+        if trial == 0:
+            abox = sorted(set(triples[n_tbox:]))
 
-        small = inference.owl_horst_closure(spark, quads)
-        got_small = {(r_.s, r_.p, r_.o_lex) for r_ in small.collect()}
-        monkeypatch.setattr(inference, "SMALL_ABOX_QUADS", 0)
-        dist = inference.owl_horst_closure(spark, quads)
-        got_dist = {(r_.s, r_.p, r_.o_lex) for r_ in dist.collect()}
-        monkeypatch.undo()
+    # Δ of the first graph; own generator, so the graphs above stay what
+    # they were
+    base, quads, _ = graphs[0]
+    drng = random.Random(0)
+    added = [t for t in dict.fromkeys(
+                 [(drng.choice(nodes), drng.choice(props),
+                   drng.choice(nodes)) for _ in range(2)]
+                 + [(drng.choice(nodes), RDF_TYPE, drng.choice(classes))])
+             if t not in base]
+    gone = drng.sample(abox, 3)
+    grown = mk_quads(spark, base + added)
+    kept = mk_quads(spark, [t for t in base if t not in gone])
+    want_grown = world(grown, inference.owl_horst_closure(spark, grown))
+    want_kept = world(kept, inference.owl_horst_closure(spark, kept))
+
+    monkeypatch.setattr(inference, "SMALL_ABOX_QUADS", 0)
+
+    def distributed(trial):
+        got_small = graphs[trial][2]
+        dist = inference.owl_horst_closure(spark, graphs[trial][1])
+        got_dist = world(dist)
         assert got_small == got_dist, (
             f"trial {trial}: worklist-only={sorted(got_small - got_dist)[:5]} "
             f"distributed-only={sorted(got_dist - got_small)[:5]}")
+        return dist
+
+    def increment(dist):
+        inc = inference.owl_horst_increment(spark, quads, dist,
+                                            mk_quads(spark, added))
+        assert world(grown, dist, inc) == want_grown, \
+            f"trial 0: increment by {added}"
+
+    def decrement(dist):
+        dec = inference.owl_horst_decrement(spark, kept, dist,
+                                            mk_quads(spark, gone))
+        assert dec is not None
+        assert world(kept, dec) == want_kept, f"trial 0: decrement by {gone}"
+
+    with ThreadPoolExecutor(4) as pool:
+        closures = [pool.submit(distributed, t) for t in range(3)]
+        dist = closures[0].result()
+        checks = [pool.submit(increment, dist), pool.submit(decrement, dist)]
+        for f in closures[1:] + checks:
+            f.result()
 
 
 def test_sameas_incremental_seed_matches_full_rebuild(spark):

@@ -244,3 +244,45 @@ def test_maintenance_and_queries_write_no_limit_conf(spark, monkeypatch):
     # the spy sees the maintenance plans' constraint-propagation scope
     assert "spark.sql.constraintPropagation.enabled" in written
     assert [k for k in written if k.startswith("spark.sql.limit.")] == []
+
+
+def test_overlapping_maintenance_scopes_keep_conf(spark):
+    """Two threads' constraint-propagation scopes on one session, closed
+    in the order A enters, B enters, A exits, B exits: the conf stays off
+    while B's maintenance runs, and B's exit restores the value from
+    before A's entry."""
+    from graphdb_free_mocha_sa_spark.operators.inference import \
+        _no_constraint_propagation
+    key = "spark.sql.constraintPropagation.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    a_in, b_in, a_out = (threading.Event() for _ in range(3))
+    seen: dict = {}
+
+    def thread_a():
+        with _no_constraint_propagation(spark):
+            a_in.set()
+            b_in.wait(30)
+        a_out.set()
+
+    def thread_b():
+        a_in.wait(30)
+        with _no_constraint_propagation(spark):
+            b_in.set()
+            a_out.wait(30)
+            seen["inside_b"] = spark.conf.get(key)
+
+    try:
+        threads = [threading.Thread(target=f) for f in (thread_a, thread_b)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+        assert not any(t.is_alive() for t in threads)
+        assert seen == {"inside_b": "false"}
+        assert spark.conf.get(key) == "true"
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
