@@ -5,7 +5,13 @@ the commit when a consistency rule fires with it on)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
+
+REPO = Path(__file__).resolve().parents[1]
+TEMPLATE = REPO / "fixtures" / "repo-config.ttl"
+REFERENCE_TEMPLATE = REPO.parent / "reference" / "repo-config.ttl"
 
 OWL = "http://www.w3.org/2002/07/owl#"
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -145,7 +151,8 @@ def test_update_gate_covers_delete_driven_violations(spark):
 
 
 def test_config_template_maps_flag(spark, tmp_path):
-    from graphdb_free_mocha_sa_spark.config import engine_from_config
+    from graphdb_free_mocha_sa_spark.config import (engine_from_config,
+                                                    parse_repo_config)
     cfg = tmp_path / "repo.ttl"
     cfg.write_text("""
 @prefix owlim: <http://www.ontotext.com/trree/owlim#>.
@@ -154,9 +161,18 @@ def test_config_template_maps_flag(spark, tmp_path):
 """)
     eng = engine_from_config(spark, str(cfg))
     assert eng.check_inconsistencies is True
-    # the shipped reference template keeps it off
-    eng2 = engine_from_config(spark, "/root/reference/repo-config.ttl")
+    # the shipped template keeps it off (fixtures/repo-config.ttl is rebuilt
+    # from the documents' citations of the reference's repo-config.ttl)
+    eng2 = engine_from_config(spark, str(TEMPLATE))
     assert eng2.check_inconsistencies is False
+    # where the reference adapter is checked out beside this repo, the real
+    # template must give the same answer and agree with every fixture value
+    if REFERENCE_TEMPLATE.is_file():
+        eng3 = engine_from_config(spark, str(REFERENCE_TEMPLATE))
+        assert eng3.check_inconsistencies is False
+        real = parse_repo_config(str(REFERENCE_TEMPLATE))
+        fixture = parse_repo_config(str(TEMPLATE))
+        assert {k: real.get(k) for k in fixture} == fixture
 
 
 def test_self_disjoint_class_flagged(spark):

@@ -4,6 +4,7 @@ quoted CSV, whole-file text, and the shard-writing sink."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +12,7 @@ from pyspark.sql import functions as F
 from graphdb_free_mocha_sa_spark.sources.documents import (
     read_csv_documents, read_jsonl, read_text_documents, write_jsonl)
 
-FIX = "/root/repo/fixtures"
+FIX = str(Path(__file__).resolve().parents[1] / "fixtures")
 
 
 def test_jsonl_gz_strict_read_exact(spark):
