@@ -290,6 +290,10 @@ class QuadStore:
     # -- writes ---------------------------------------------------------
 
     def add_quads(self, quads: DataFrame, dedup: bool = False):
+        """Append ``quads``. With the closure live, a post-write world
+        under ``inference.SMALL_ABOX_QUADS`` is re-closed on the driver;
+        a larger one takes the incremental closure, or a re-materialization
+        when the delta changes the TBox."""
         with self._writer_gate:
             self.write_epoch += 1
             self._add_quads_locked(quads, dedup)
@@ -311,8 +315,10 @@ class QuadStore:
             delta = (delta.alias("l").join(cur.alias("r"), cond, "left_anti")
                      .dropDuplicates(["g", "s", "p", "o_lex", "o_dt", "o_lang"]))
         if self._inferred is not None:
-            # closure is live: maintain it incrementally (EP2 parity — the
+            # closure is live: maintain it on every write (EP2 parity — the
             # reference applies incremental inference on streaming INSERTs).
+            # A driver-sized world is re-closed; a larger one takes the
+            # increment over the pre-append base.
             # The whole read-increment-commit runs under the writer lock so
             # (a) concurrent writers can't interleave between the increment
             # basis and the append, and (b) base + closure swap in one
@@ -320,11 +326,16 @@ class QuadStore:
             # consequences (r9 soak fix; writers serialize, readers don't
             # block: they only take the lock for the snapshot() pair read)
             from graphdb_free_mocha_sa_spark.operators.inference import (
-                owl_horst_closure, owl_horst_increment)
+                owl_horst_closure, owl_horst_increment, reclose_small)
             with self._lock:
-                new_inf = owl_horst_increment(self.spark, self._df,
-                                              self._inferred, delta)
+                base = self._df             # the increment's basis
                 self._commit_append(delta)
+                new_inf = reclose_small(self.spark, self._df)
+                if new_inf is not None:
+                    self._inferred = new_inf
+                    return
+                new_inf = owl_horst_increment(self.spark, base,
+                                              self._inferred, delta)
                 if new_inf is None:          # TBox changed: re-materialize
                     self._inferred = owl_horst_closure(self.spark, self._df)
                 elif not new_inf.isEmpty():
@@ -448,15 +459,23 @@ class QuadStore:
                                deleted: DataFrame) -> DataFrame:
         """The maintained closure after an ABox delete: GraphDB retracts
         inferred statements when their premises go (repo-config.ttl
-        inference on delete). With the deleted quads in hand, DRed
-        maintenance (over-delete the consequence cone, re-derive
+        inference on delete). A post-delete world under
+        ``inference.SMALL_ABOX_QUADS`` is re-closed on the driver. Above
+        it, DRed maintenance (over-delete the consequence cone, re-derive
         survivors — operators/inference.owl_horst_decrement) keeps the
         cost proportional to the deletion's consequences; TBox deletions
         re-materialize from the surviving base facts. Called with the
         writer lock HELD; returns the frame the caller commits together
         with the new base."""
         from graphdb_free_mocha_sa_spark.operators.inference import (
-            QUAD_COLS, owl_horst_closure, owl_horst_decrement, pin_inference)
+            QUAD_COLS, owl_horst_closure, owl_horst_decrement, pin_inference,
+            reclose_small)
+        # Re-closing needs no deleted set: it skips the 3 jobs that pin it
+        # and test it for emptiness.
+        new_inf = reclose_small(self.spark, new_df)
+        if new_inf is not None:
+            self._dred_depth = 0
+            return new_inf
         # Pin the deleted set HERE (r12 opt): the emptiness check below and
         # every decrement-side reader share one materialization instead of
         # re-running the last-copy-gone anti-join (the lazy isEmpty alone

@@ -38,6 +38,15 @@ def bounded_path(request, monkeypatch):
     return request.param
 
 
+@pytest.fixture
+def maintain_incrementally(monkeypatch):
+    """Store writes maintain a live closure with DRed and the increment
+    even when the world is driver-sized: ``inference.reclose_small``
+    always answers "too big"."""
+    from graphdb_free_mocha_sa_spark.operators import inference
+    monkeypatch.setattr(inference, "reclose_small", lambda spark, world: None)
+
+
 @pytest.fixture(scope="session")
 def tables(spark):
     from graphdb_free_mocha_sa_spark.sources.registry import load_tables

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from graphdb_free_mocha_sa_spark.sources.documents import (
     read_csv_documents, read_jsonl, read_text_documents, write_jsonl)
+from tests.conftest import SF_DIR
 
 FIX = str(Path(__file__).resolve().parents[1] / "fixtures")
 
@@ -50,7 +51,7 @@ def test_csv_multiline_quoting(spark):
 
 
 def test_jsonl_round_trip_with_shards(spark, tmp_path):
-    src = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    src = (spark.read.parquet(f"{SF_DIR}/documents.parquet")
            .limit(100))
     out = str(tmp_path / "shards")
     write_jsonl(src, out, shards=4, compression="gzip")

@@ -407,7 +407,7 @@ def test_near_dup_plan_has_no_driver_materialization(spark, embeddings):
 def test_ivf_topk_recall(spark):
     from graphdb_free_mocha_sa_spark.operators.similarity import (
         brute_force_topk, ivf_topk)
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = e.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
     ivf = {(r.query_id, r.vec_id)

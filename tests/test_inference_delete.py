@@ -3,7 +3,9 @@
 Closed-form fixtures: after an ABox DELETE, the maintained closure must
 equal a from-scratch re-materialization of the surviving base facts —
 checked literally (set equality of inferred (s,p,o) triples) so DRed
-cannot silently over- or under-delete.
+cannot silently over- or under-delete. These worlds are driver-sized, so
+the store would re-close them; the module forces DRed instead
+(``tests/test_write_reclosure.py`` runs the same graphs re-closed).
 """
 
 from __future__ import annotations
@@ -13,6 +15,8 @@ from pyspark.sql import functions as F
 
 from graphdb_free_mocha_sa_spark.model import (OWL, QUAD_SCHEMA, RDF_TYPE,
                                                RDFS)
+
+pytestmark = pytest.mark.usefixtures("maintain_incrementally")
 
 SC = RDFS + "subClassOf"
 TRANS = OWL + "TransitiveProperty"

@@ -112,7 +112,8 @@ def test_gate_falls_back_when_state_overflows_bound(spark, monkeypatch):
     eng.update(f"INSERT DATA {{ <urn:z> <{RDFT}> <urn:K9> }}")
 
 
-def test_materialized_closure_is_pinned_and_dred_equivalent(spark):
+def test_materialized_closure_is_pinned_and_dred_equivalent(
+        spark, maintain_incrementally):
     """The distributed closure now returns a pinned frame; DRed over it
     must keep producing the exact surviving closure (smooth delete)."""
     from graphdb_free_mocha_sa_spark.model import RDFS

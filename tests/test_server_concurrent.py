@@ -189,7 +189,8 @@ def test_dred_maintenance_under_snapshot_readers(served_engine):
     assert len(reads) >= 2
 
 
-def test_maintenance_and_queries_write_no_limit_conf(spark, monkeypatch):
+def test_maintenance_and_queries_write_no_limit_conf(spark, monkeypatch,
+                                                    maintain_incrementally):
     """The server answers every thread from one SparkSession, so no
     maintenance or query path may write a session-global
     ``spark.sql.limit.*`` key: a concurrent reader would plan under it,
