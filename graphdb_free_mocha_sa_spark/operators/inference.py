@@ -53,6 +53,8 @@ from pyspark.sql import functions as F
 
 from graphdb_free_mocha_sa_spark.model import (OWL, QUAD_COLS, QUAD_SCHEMA,
                                                RDF_TYPE, RDFS)
+from graphdb_free_mocha_sa_spark.operators.paths import (
+    SMALL_PARTS_ROWS, _link, transitive_closure)
 from graphdb_free_mocha_sa_spark.session import driver_rows
 
 SUBCLASS = RDFS + "subClassOf"
@@ -645,16 +647,18 @@ def _driver_rule_step(schema: Schema):
 #: the distributed path below is for ABoxes that need it. The same bound
 #: picks how a write maintains the closure (:func:`reclose_small`): a
 #: post-write world under it is re-closed on the driver. Measured on 4 cores
-#: for one store write at 5k and 47k quads: 4-6 Spark jobs and 1-5 s, where
-#: DRed or the increment ran 47-57 jobs and 11-18 s.
+#: for one store write at 5k quads: 2 Spark jobs for an insert, 4 for a
+#: delete, where DRed or the increment ran 47-57 jobs at 5k and 47k quads.
 SMALL_ABOX_QUADS = 50_000
 #: safety valve: if the driver-side closure blows past this many inferred
 #: facts (pathological transitive chains), abandon it and run distributed.
 SMALL_ABOX_MAX_INFERRED = 2_000_000
 
 
-def _closure_small_abox(spark: SparkSession, rows, graph: str) -> DataFrame | None:
-    """Driver-side OWL-Horst fixpoint for ABoxes under SMALL_ABOX_QUADS.
+def _closure_small_abox(spark: SparkSession, quads: DataFrame,
+                        graph: str) -> DataFrame | None:
+    """Driver-side OWL-Horst fixpoint for ABoxes under SMALL_ABOX_QUADS:
+    collects ``quads`` (one Spark job) and closes them in a worklist.
 
     Semantically identical to the distributed fixpoint: same rule set, same
     newness key (s, p, o_lex) as :func:`_anti_known`, base facts seed the
@@ -664,6 +668,7 @@ def _closure_small_abox(spark: SparkSession, rows, graph: str) -> DataFrame | No
     """
     from collections import deque
 
+    rows = quads.select(*QUAD_COLS).collect()
     sch = Schema(tbox_rows=[
         r for r in rows
         if _is_tbox(r["p"], r["o_lex"])
@@ -778,52 +783,43 @@ def owl_horst_closure(spark: SparkSession, quads: DataFrame,
 
     Queries then read ``quads ∪ inferred`` (SURVEY §1.4 'quads_inferred').
     """
-    # bounded COUNT first (r11 opt): the old probe collected up to 50k+1
-    # rows to the driver just to learn "too big" on every distributed-path
-    # materialization; the count moves no rows, and small stores pay one
-    # extra tiny job before the collect they needed anyway. Probed up to
-    # the repartition threshold so _closure_body reuses the SAME number
-    # instead of re-counting the pinned base (r12 opt, one job less).
-    n_probe = quads.limit(_CLOSURE_SMALL_PARTS_ROWS + 1).count()
+    # one size probe serves both choices below. It reads no columns, so it
+    # moves only empty rows: collecting full rows to learn "too big" hauled
+    # 50k rows to the driver on every distributed materialization.
+    sized = driver_rows(quads.select(), SMALL_PARTS_ROWS)
+    n_probe = len(sized) if sized is not None else SMALL_PARTS_ROWS + 1
     if n_probe <= SMALL_ABOX_QUADS:
-        head = quads.select(*QUAD_COLS).collect()
-        small = _closure_small_abox(spark, head, graph)
+        small = _closure_small_abox(spark, quads, graph)
         if small is not None:
             return small
     with _no_constraint_propagation(spark):
-        return _closure_body(spark, quads, graph, n_probe=n_probe)
+        return _closure_body(spark, quads, graph, n_probe)
 
 
 def reclose_small(spark: SparkSession, world: DataFrame) -> DataFrame | None:
-    """The closure of a post-write ``world`` re-computed from scratch when
-    the world fits SMALL_ABOX_QUADS; ``None`` above the bound, where the
-    caller maintains the closure with :func:`owl_horst_increment` or
-    :func:`owl_horst_decrement`. Under the bound the driver worklist
-    re-closes the world in a few jobs, while DRed and the increment run
-    their distributed loops whenever the TBox has a transitive, functional
-    or restriction property. The probe reads no columns, so it is one job
-    that moves only empty rows. The result is left unpinned: a pin cost
-    each write more than it saved the reads after it."""
+    """The closure of a post-write ``world`` re-computed from scratch on
+    the driver when the world fits SMALL_ABOX_QUADS; ``None`` above the
+    bound, or when the driver worklist overflows SMALL_ABOX_MAX_INFERRED.
+    On ``None`` the caller maintains the closure with
+    :func:`owl_horst_increment` or :func:`owl_horst_decrement`. Under the
+    bound a re-closure is two Spark jobs (the size probe, which reads no
+    columns, and the collect), where DRed and the increment run distributed
+    loops whenever the TBox has a transitive, functional or restriction
+    property. The result is left unpinned: a pin cost each write more than
+    it saved the reads after it."""
     if driver_rows(world.select(), SMALL_ABOX_QUADS) is None:
         return None
-    return owl_horst_closure(spark, world)
-
-
-#: below this base size the fixpoint narrows to 4 partitions (wide shuffles
-#: don't amortize); also the bound of the closure entry probe, so the body
-#: can reuse the probed count instead of re-counting
-_CLOSURE_SMALL_PARTS_ROWS = 100_000
+    return _closure_small_abox(spark, world, INFERRED_GRAPH)
 
 
 def _closure_body(spark: SparkSession, quads: DataFrame,
-                  graph: str, n_probe: int | None = None) -> DataFrame:
+                  graph: str, n_probe: int) -> DataFrame:
     schema = Schema(quads)
     g = F.lit(graph)
 
     # transitive properties: closure per property via the path engine
     trans_pieces: list[DataFrame] = []
     if schema.transitive:
-        from graphdb_free_mocha_sa_spark.operators.paths import transitive_closure, _link
         for p in sorted(schema.transitive):
             closed = transitive_closure(_link(quads, p, None))
             trans_pieces.append(closed.select(
@@ -832,14 +828,10 @@ def _closure_body(spark: SparkSession, quads: DataFrame,
                 F.col("o__lang").alias("o_lang"), F.col("o__num").alias("o_num"),
                 F.col("o__ts").alias("o_ts")))
 
-    # small ABoxes don't amortize wide shuffles per iteration (cf.
-    # paths.py). The entry probe already bounded-counted the base up to
-    # this threshold — reuse it: one checkpoint of the base instead of
-    # checkpoint → count → re-checkpoint (r12 opt, 3 jobs → 1).
+    # small ABoxes don't amortize wide shuffles per iteration; the entry
+    # probe sized the base, so it is checkpointed once
     known = quads.select(*QUAD_COLS)
-    if n_probe is None:
-        n_probe = known.limit(_CLOSURE_SMALL_PARTS_ROWS + 1).count()
-    if n_probe < _CLOSURE_SMALL_PARTS_ROWS:
+    if n_probe < SMALL_PARTS_ROWS:
         known = known.repartition(4)
     known = known.localCheckpoint()
     # One-shot fixpoint (r12 opt): when the only rules are rdfs2/3/7/9

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphdb_free_mocha_sa_spark.model import VAR_SUFFIXES
+from graphdb_free_mocha_sa_spark.session import driver_rows
 from graphdb_free_mocha_sa_spark.sparql import algebra as A
 
 MAX_ITERS = 64
@@ -122,6 +123,9 @@ def _nodes(quads: DataFrame, group: bool = False) -> DataFrame:
 #: result is bounded by (2·edges)² rows. Same adaptive philosophy as the
 #: engine's ENCODE_MIN_QUADS: the distributed path is for data that needs it.
 SMALL_GRAPH_EDGES = 500
+#: below this many rows a distributed fixpoint narrows to 4 partitions (task
+#: launches outweigh wide shuffles); the OWL-Horst closure shares it
+SMALL_PARTS_ROWS = 100_000
 
 
 def _closure_small(edges: DataFrame, sufs: list[str],
@@ -178,13 +182,13 @@ def transitive_closure(pairs: DataFrame) -> DataFrame:
     keys = ([GROUP_COL] if grouped else []) + ["s", "o"]
     sufs = _sufs(pairs)
     edges = pairs.dropDuplicates(keys).localCheckpoint()
-    n_edges = edges.count()
+    sized = driver_rows(edges.select(), SMALL_PARTS_ROWS)
+    n_edges = len(sized) if sized is not None else SMALL_PARTS_ROWS + 1
     if n_edges < SMALL_GRAPH_EDGES:
         return _closure_small(edges, sufs, grouped)
     # Mid-size graphs don't need 32-way shuffles per iteration — task-launch
-    # overhead dominates. Size once (free after the checkpoint) and coalesce
-    # the loop's parallelism to match; big graphs keep full parallelism.
-    if n_edges < 100_000:
+    # overhead dominates; big graphs keep full parallelism.
+    if n_edges < SMALL_PARTS_ROWS:
         edges = edges.repartition(4).localCheckpoint()
     # joined frontier: delta.o == edges.s (within one graph when grouped)
     e2 = edges.select(

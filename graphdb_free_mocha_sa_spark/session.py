@@ -98,7 +98,8 @@ def driver_rows(df: DataFrame, bound: int) -> list[Row] | None:
     limits, then a single-partition global limit), where
     ``limit().collect()`` ramps executeTake over a many-partition frame in
     up to four jobs. It writes no session conf, so concurrent readers of
-    the shared session see nothing of it."""
+    the shared session see nothing of it. Over ``df.select()`` it sizes a
+    frame in that one job, moving only empty rows (a ``count()`` is two)."""
     rdd = df.limit(bound + 1).rdd
     # a plan AQE proved empty has no partitions, and collecting it would
     # still post a (stage-less) job

@@ -32,8 +32,8 @@ def bounded_path(request, monkeypatch):
     answer is also produced by the distributed fallback."""
     if request.param == "fallback":
         from graphdb_free_mocha_sa_spark import engine
-        from graphdb_free_mocha_sa_spark.operators import inference
-        for mod in (engine, inference):
+        from graphdb_free_mocha_sa_spark.operators import inference, paths
+        for mod in (engine, inference, paths):
             monkeypatch.setattr(mod, "driver_rows", lambda df, bound: None)
     return request.param
 

@@ -1,10 +1,12 @@
 """Closure maintenance of driver-sized worlds by re-closing on the driver.
 
 A store whose post-write world fits ``inference.SMALL_ABOX_QUADS``
-re-closes it with ``owl_horst_closure`` instead of running DRed
-(``owl_horst_decrement``) or the increment (``owl_horst_increment``).
-Larger worlds keep those two paths. ``tests/test_inference_delete.py``
-runs the delete graphs below through DRed.
+re-closes it with the driver worklist (``inference.reclose_small``) instead
+of running DRed (``owl_horst_decrement``) or the increment
+(``owl_horst_increment``). Larger worlds, and worlds whose worklist
+overflows ``SMALL_ABOX_MAX_INFERRED``, keep those two paths.
+``tests/test_inference_delete.py`` runs the delete graphs below through
+DRed.
 """
 
 from __future__ import annotations
@@ -122,7 +124,10 @@ def test_writes_reclose_driver_sized_worlds(spark, monkeypatch, calls):
     the closure of the surviving base, and DRed never runs. A fresh
     individual inserted under a transitive property gives the closure of
     the new base both re-closed and, with the re-closure forced off,
-    through the increment."""
+    through the increment. When the worklist overflows
+    SMALL_ABOX_MAX_INFERRED, the closure comes from the distributed path
+    with the same triples, and driver-sized writes take DRed and the
+    increment."""
     def delete(case):
         name, base, victims = case
         st = _store(spark, base)
@@ -141,11 +146,31 @@ def test_writes_reclose_driver_sized_worlds(spark, monkeypatch, calls):
     assert ("urn:new", "urn:p:partOf", "urn:org7") in _triples(st._inferred)
     assert calls["owl_horst_increment"] == 0
 
+    # the worlds before and after a delete and an insert, closed on the
+    # driver; with the worklist overflowing, the distributed closure, DRed
+    # and the increment must give the same triples
+    victim = [("urn:g", "urn:i1", RDF_TYPE, "urn:C1")]
+    deleted = [q for q in world if q not in victim]
+    worlds = [world, deleted, deleted + _fresh_individual("urn:new")]
+    want = [_triples(inference.owl_horst_closure(spark, _mk(spark, w)))
+            for w in worlds]
+    with monkeypatch.context() as m:
+        m.setattr(inference, "SMALL_ABOX_MAX_INFERRED", 0)
+        assert inference.reclose_small(spark, _mk(spark, world)) is None
+        st = _store(spark, world)
+        got = [_triples(st._inferred)]
+        st.delete_quads(_mk(spark, victim))
+        got.append(_triples(st._inferred))
+        st.add_quads(_mk(spark, _fresh_individual("urn:new")))
+        got.append(_triples(st._inferred))
+    assert got == want
+    assert calls == {"owl_horst_decrement": 1, "owl_horst_increment": 1}
+
     monkeypatch.setattr(inference, "reclose_small", lambda spark, world: None)
     st = _store(spark, world)
     st.add_quads(_mk(spark, _fresh_individual("urn:new")))
     _assert_closed(spark, st, "insert, increment")
-    assert calls["owl_horst_increment"] == 1
+    assert calls["owl_horst_increment"] == 2
 
 
 def _jobs(spark, write):
@@ -161,17 +186,20 @@ def _jobs(spark, write):
 
 
 def test_single_write_job_budget(spark, monkeypatch, calls):
-    """On the ``operators_batch`` TBox shape with about 500 individuals, a
-    single-instance delete and a fresh-individual insert each run at most
-    8 Spark jobs (DRed and the increment take 30-70 here): one pin of the
-    post-delete base, the size probe and the driver closure. With the bound
-    below the world size, both writes take DRed and the increment again."""
-    st = _store(spark, _ops_batch_world(500))
+    """On the ``operators_batch`` TBox shape with about 500 individuals,
+    materialization and a fresh-individual insert each run at most 2 Spark
+    jobs (the size probe and the collect of the driver closure), and a
+    single-instance delete at most 4 (plus the pin of the post-delete
+    base); DRed and the increment take 58-62 here. With the bound below
+    the world size, both writes take DRed and the increment again."""
+    st = QuadStore(spark, _mk(spark, _ops_batch_world(500)))
+    n_materialize = _jobs(spark, st.materialize_inference)
     victim = _mk(spark, [("urn:g", "urn:i1", RDF_TYPE, "urn:C1")])
     n_delete = _jobs(spark, lambda: st.delete_quads(victim))
     n_insert = _jobs(spark, lambda: st.add_quads(
         _mk(spark, _fresh_individual("urn:new"))))
-    assert max(n_delete, n_insert) <= 8, (n_delete, n_insert)
+    assert n_materialize <= 2 and n_delete <= 4 and n_insert <= 2, \
+        (n_materialize, n_delete, n_insert)
     assert calls == {"owl_horst_decrement": 0, "owl_horst_increment": 0}
 
     monkeypatch.setattr(inference, "SMALL_ABOX_QUADS", 100)
