@@ -623,42 +623,17 @@ class Engine:
         streams N-Quads lines. For cluster-scale dumps use the
         distributed file exporter (sources.rdf.export_nquads) instead —
         this surface is the protocol-style streaming dump."""
-        from graphdb_free_mocha_sa_spark.sparql.results import iter_trig
+        from graphdb_free_mocha_sa_spark.sparql import results as R
         from graphdb_free_mocha_sa_spark.store import DEFAULT_GRAPH
-        df = self.store.df
-        if fmt == "trig":
-            for chunk in iter_trig(df, default_graph=DEFAULT_GRAPH):
-                write(chunk)
-            return
-        if fmt == "nquads":
-            from graphdb_free_mocha_sa_spark.sparql.results import iter_nquads
-            for chunk in iter_nquads(df, default_graph=DEFAULT_GRAPH):
-                write(chunk)
-            return
-        if fmt == "jsonld":
-            from graphdb_free_mocha_sa_spark.sparql.results import iter_jsonld
-            for chunk in iter_jsonld(df, default_graph=DEFAULT_GRAPH):
-                write(chunk)
-            return
-        if fmt == "trix":
-            from graphdb_free_mocha_sa_spark.sparql.results import iter_trix
-            for chunk in iter_trix(df, default_graph=DEFAULT_GRAPH):
-                write(chunk)
-            return
-        if fmt == "rdfjson":
-            from graphdb_free_mocha_sa_spark.sparql.results import (
-                iter_rdfjson)
-            for chunk in iter_rdfjson(df, default_graph=DEFAULT_GRAPH):
-                write(chunk)
-            return
-        if fmt == "binaryrdf":
-            # the one BINARY member of the dump family: chunks are bytes
-            from graphdb_free_mocha_sa_spark.sparql.results import (
-                iter_binaryrdf)
-            for chunk in iter_binaryrdf(df, default_graph=DEFAULT_GRAPH):
-                write(chunk)
-            return
-        raise ValueError(f"unknown export format {fmt!r}")
+        # binaryrdf is the one BINARY member of the family: its chunks are bytes
+        dump = {"trig": R.iter_trig, "nquads": R.iter_nquads,
+                "jsonld": R.iter_jsonld, "trix": R.iter_trix,
+                "rdfjson": R.iter_rdfjson,
+                "binaryrdf": R.iter_binaryrdf}.get(fmt)
+        if dump is None:
+            raise ValueError(f"unknown export format {fmt!r}")
+        for chunk in dump(self.store.df, default_graph=DEFAULT_GRAPH):
+            write(chunk)
 
     def query_framed(self, sparql: str) -> bytes:
         """query_json behind the reference's length-prefixed result framing

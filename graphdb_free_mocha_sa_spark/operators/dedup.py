@@ -67,17 +67,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
 # ---------------------------------------------------------------- MinHash LSH
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature via double hashing: each shingle string is hashed
-    ONCE (xxhash64 over the variable-length text), then the per-seed hash
-    family rehashes the resulting fixed 8-byte value — 32 cheap long-hashes
-    instead of 32 string traversals."""
-    base = F.transform(shingles, lambda sh: F.xxhash64(sh))
-    return F.array(*[
-        F.array_min(F.transform(base, lambda h: F.xxhash64(h, F.lit(seed))))
-        for seed in range(num_hashes)])
-
-
 def _minhash_sig_table(df: DataFrame, text_col: str, id_col: str,
                        n: int, num_hashes: int) -> DataFrame:
     """Per-doc MinHash signature table ``(id, shh, sig)``.

@@ -14,9 +14,36 @@ from __future__ import annotations
 import json
 from http.server import (BaseHTTPRequestHandler, HTTPServer,
                          ThreadingHTTPServer)
+from typing import Optional
 from urllib.parse import parse_qs
 
 from graphdb_free_mocha_sa_spark.engine import Engine
+
+
+_UPDATE_VERBS = ("INSERT", "DELETE", "LOAD", "CLEAR", "DROP", "CREATE",
+                 "COPY", "MOVE", "ADD", "WITH", "PREFIX INSERT")
+
+
+def _run_if_update(engine: Engine, body: str, content_type: str
+                   ) -> tuple[str, Optional[tuple[int, str]]]:
+    """Decode the request body (raw, or a form with an ``update`` /
+    ``query`` field). An update runs here and its JSON ack comes back as
+    ``(status, payload)``; a query comes back as its text with no ack."""
+    query = body
+    is_update = False
+    if "x-www-form-urlencoded" in content_type:
+        form = parse_qs(body)
+        if "update" in form:
+            query, is_update = form["update"][0], True
+        elif "query" in form:
+            query = form["query"][0]
+    if not (is_update or query.lstrip().upper().startswith(_UPDATE_VERBS)):
+        return query, None
+    try:
+        engine.update(query)
+        return query, (200, json.dumps({"ok": True}))
+    except Exception as e:  # noqa: BLE001
+        return query, (400, json.dumps({"ok": False, "error": str(e)[:500]}))
 
 
 def handle_request(engine: Engine, body: str,
@@ -26,24 +53,8 @@ def handle_request(engine: Engine, body: str,
     Update requests return ``{"ok": true}``; queries return
     SPARQL-Results-JSON (engine.query_json supplies the sentinel on error).
     """
-    query = body
-    is_update = False
-    if "x-www-form-urlencoded" in content_type:
-        form = parse_qs(body)
-        if "update" in form:
-            query, is_update = form["update"][0], True
-        elif "query" in form:
-            query = form["query"][0]
-    upper = query.lstrip().upper()
-    if is_update or upper.startswith(("INSERT", "DELETE", "LOAD", "CLEAR",
-                                      "DROP", "CREATE", "COPY", "MOVE",
-                                      "ADD", "WITH", "PREFIX INSERT")):
-        try:
-            engine.update(query)
-            return 200, json.dumps({"ok": True})
-        except Exception as e:  # noqa: BLE001
-            return 400, json.dumps({"ok": False, "error": str(e)[:500]})
-    return 200, engine.query_json(query)
+    query, ack = _run_if_update(engine, body, content_type)
+    return ack if ack is not None else (200, engine.query_json(query))
 
 
 #: Accept-header negotiation (B51+, r6): first recognized media type wins;
@@ -102,24 +113,9 @@ def handle_request_stream(engine: Engine, body: str, write,
     body, matching handle_request). Returns the status. The socket server
     uses this with chunked transfer-encoding, so a huge SELECT never
     buffers on the driver."""
-    query = body
-    is_update = False
-    if "x-www-form-urlencoded" in content_type:
-        form = parse_qs(body)
-        if "update" in form:
-            query, is_update = form["update"][0], True
-        elif "query" in form:
-            query = form["query"][0]
-    upper = query.lstrip().upper()
-    if is_update or upper.startswith(("INSERT", "DELETE", "LOAD", "CLEAR",
-                                      "DROP", "CREATE", "COPY", "MOVE",
-                                      "ADD", "WITH", "PREFIX INSERT")):
-        try:
-            engine.update(query)
-            payload, code = json.dumps({"ok": True}), 200
-        except Exception as e:  # noqa: BLE001
-            payload, code = json.dumps({"ok": False,
-                                        "error": str(e)[:500]}), 400
+    query, ack = _run_if_update(engine, body, content_type)
+    if ack is not None:
+        code, payload = ack
         if start is not None:
             start(code, "json")     # acks are JSON whatever was negotiated
         write(payload)

@@ -16,9 +16,9 @@ pruned by Catalyst when unused.
 Semantics parity target: W3C SPARQL 1.1 as accepted by the reference
 (GraphDBSystemAdapter.java:246). Join compatibility of unbound shared
 variables follows the spec (§18.3 compatible-mappings: an UNBOUND shared
-variable is compatible with anything) via ``_compat_union_join`` — an r11
-note removal: earlier rounds documented a strict-NULL deviation here that
-the engine has not had since the compat-join landed (pinned by
+variable is compatible with anything). That relation lives in one place,
+the boundness-mask fan-out ``Translator._mask_pieces``; the compatibility
+join, MINUS and EXISTS each only join its pieces (pinned by
 tests/test_round11_fixes.py::test_values_undef_shared_variable_join).
 Remaining documented deviation: numeric object constants in patterns match
 by value (our encoder stores xsd:long for fixture integers).
@@ -26,6 +26,7 @@ by value (our encoder stores xsd:long for fixture integers).
 
 from __future__ import annotations
 
+import dataclasses
 import itertools
 import re
 from typing import Callable, Optional
@@ -290,9 +291,9 @@ class Translator:
 
         if not shared and extra is None and how == "inner":
             return left.crossJoin(right)
-        if not shared and how in ("left_anti", "left_semi"):
+        if not shared and how == "left_anti":
             # no shared vars: MINUS keeps everything (SPARQL compat edge case)
-            return left if how == "left_anti" else left
+            return left
 
         if how == "inner" and extra is None and compat:
             # Compatibility semantics via a UNION of EQUI-joins instead of a
@@ -307,15 +308,14 @@ class Translator:
                                              [u for u in shared
                                               if u not in compat], suffix)
         else:
-            cond = F.lit(True)
-            for v in shared:
-                if v in compat and how not in ("left_anti", "left_semi"):
-                    cond = cond & (left[v].isNull() | r2[v + suffix].isNull()
-                                   | (left[v] == r2[v + suffix]))
-                elif how in ("left_anti",):
-                    cond = cond & left[v].eqNullSafe(r2[v + suffix])
-                else:
-                    cond = cond & (left[v] == r2[v + suffix])
+            # OPTIONAL over maybe-unbound vars: unbound or equal; the
+            # always-bound keys stay equi-join keys
+            loose = sorted(compat) if how != "left_anti" else []
+            cond = _key_eq(left, r2, [v for v in shared if v not in loose],
+                           suffix, null_safe=how == "left_anti")
+            for v in loose:
+                cond = cond & (left[v].isNull() | r2[v + suffix].isNull()
+                               | (left[v] == r2[v + suffix]))
             if extra is not None:
                 def resolver(name: str) -> TCol:
                     if name in shared or name in lvars:
@@ -327,7 +327,7 @@ class Translator:
                     return _fam_tcol(r2, name, suffix if name in shared else "")
                 cond = cond & extra(resolver)
             joined = left.join(r2, cond, how)
-        if how in ("left_anti", "left_semi"):
+        if how == "left_anti":
             return joined
         if compat:
             # merge each compat var's families: bound side wins
@@ -363,50 +363,56 @@ class Translator:
             return list(range(1 << k))
         return sorted(r[0] for r in df.select(col).distinct().collect())
 
-    def _compat_union_join(self, left: DataFrame, r2: DataFrame,
-                           compat: list[str], strict: list[str],
-                           suffix: str) -> DataFrame:
-        """Compatibility join as a UNION of hash EQUI-joins, any number of
-        maybe-unbound shared vars.
+    def _mask_pieces(self, left: DataFrame, r2: DataFrame,
+                     compat: list[str], strict: list[str], suffix: str):
+        """§18.3 compatible mappings as hash-joinable pieces, shared by the
+        compatibility join, MINUS and EXISTS.
 
-        Partition each side by the boundness bitmask of its compat vars (an
-        unbound var is compatible with anything; values must merge when both
-        bound). A (left-mask, right-mask) piece then needs equality exactly
-        on the vars bound on BOTH sides — plus the strict always-bound keys
-        — so every piece is hash-joinable. The mask pieces partition the
-        row-pair space, so the union has no duplicates. For k ≤ 2 all 4^k
-        pieces are enumerated statically (empty ones are pruned by AQE at
-        runtime); beyond that, only the masks actually present on each side
-        (two tiny distinct collects, ≤ 2^k rows) keep the plan bounded."""
+        Partition each side by the boundness bitmask of the maybe-unbound
+        shared vars ``compat`` (``r2`` carries them renamed with
+        ``suffix``). An unbound var is compatible with anything, so a
+        (left-mask, right-mask) pair needs equality exactly on the
+        ``strict`` always-bound keys plus the compat vars bound on BOTH
+        sides. The pairs partition the row-pair space. Yields each left
+        piece with its ``(right piece, keys)`` pairs. For k ≤
+        ``COMPAT_STATIC_MAX_VARS`` all 2^k masks per side are enumerated
+        statically (AQE prunes empty pieces at runtime); beyond that only
+        the masks present (one tiny distinct collect per side, ≤ 2^k rows),
+        so an empty side yields no pieces."""
         k = len(compat)
         lm_col, rm_col = self._uniq("__bml"), self._uniq("__bmr")
         # Materialize both inputs ONCE before fanning out into mask pieces:
         # without this every piece re-executes its input subtree, and
-        # CHAINED compat joins (OPTIONAL after OPTIONAL) multiply — 4^depth
-        # re-executions. Lazy localCheckpoint = one computation, all pieces
-        # scan the pinned partitions.
+        # CHAINED compat operators (OPTIONAL after OPTIONAL) multiply —
+        # 4^depth re-executions. Lazy localCheckpoint = one computation,
+        # all pieces scan the pinned partitions.
         lt = left.withColumn(lm_col, self._bound_mask(left, compat)) \
                  .localCheckpoint(eager=False)
         rt = r2.withColumn(
             rm_col, self._bound_mask(r2, [v + suffix for v in compat])) \
             .localCheckpoint(eager=False)
         r_masks = self._side_masks(rt, rm_col, k)
-        pieces: list[DataFrame] = []
         for lm in self._side_masks(lt, lm_col, k):
-            lp = lt.filter(F.col(lm_col) == lm).drop(lm_col)
-            for rm in r_masks:
-                rp = rt.filter(F.col(rm_col) == rm).drop(rm_col)
-                keys = strict + [v for i, v in enumerate(compat)
-                                 if (lm >> i) & 1 and (rm >> i) & 1]
-                if keys:
-                    cond = F.lit(True)
-                    for u in keys:
-                        cond = cond & (lp[u] == rp[u + suffix])
-                    pieces.append(lp.join(rp, cond, "inner"))
-                else:
-                    # no key bound on both sides: every pair is compatible
-                    # (both slivers are typically tiny)
-                    pieces.append(lp.crossJoin(rp))
+            yield (lt.filter(F.col(lm_col) == lm).drop(lm_col),
+                   [(rt.filter(F.col(rm_col) == rm).drop(rm_col),
+                     strict + [v for i, v in enumerate(compat)
+                               if (lm >> i) & 1 and (rm >> i) & 1])
+                    for rm in r_masks])
+
+    def _compat_union_join(self, left: DataFrame, r2: DataFrame,
+                           compat: list[str], strict: list[str],
+                           suffix: str) -> DataFrame:
+        """Compatibility join as a UNION of hash EQUI-joins over the
+        :meth:`_mask_pieces` fan-out, any number of maybe-unbound shared
+        vars; a pair with no key bound on both sides is a cross join."""
+        pieces = [lp.join(rp, _key_eq(lp, rp, keys, suffix), "inner")
+                  if keys else lp.crossJoin(rp)
+                  for lp, rights in self._mask_pieces(left, r2, compat,
+                                                      strict, suffix)
+                  for rp, keys in rights]
+        if not pieces:
+            # dynamic masks over an EMPTY side: the join is empty
+            return left.crossJoin(r2).filter(F.lit(False))
         out = pieces[0]
         for piece in pieces[1:]:
             out = out.unionByName(piece)
@@ -437,58 +443,38 @@ class Translator:
         equi anti-joins only — no non-equi ``compat & overlap`` condition
         (which Catalyst executes as a BroadcastNestedLoopJoin at scale).
 
-        Same mask decomposition as :meth:`_compat_union_join`: partition
-        both sides by the boundness bitmask of the maybe-unbound shared
-        vars. For a (left-mask, right-mask) pair the removal condition is
-        equality on the always-bound shared vars plus the compat vars bound
-        on BOTH sides; if that key set is empty there is no domain overlap
-        and the pair removes nothing. Each left piece anti-joins every
-        overlapping right piece in a chain (survive = compatible with NO μ′
-        = survive every anti-join), then the pieces union back."""
+        Over the :meth:`_mask_pieces` fan-out, a pair whose key set is
+        empty has no domain overlap and removes nothing. Each left piece
+        anti-joins every overlapping right piece in a chain (survive =
+        compatible with NO μ′ = survive every anti-join), then the pieces
+        union back."""
         left, right = self._normalize_shared(left, right, shared)
         suffix = self._uniq("__MN")
         compat = sorted(v for v in shared
                         if _maybe_unbound(left, v) or _maybe_unbound(right, v))
         always = [v for v in shared if v not in compat]
-        k = len(compat)
         r2 = right.select(*[F.col(v).alias(v + suffix) for v in shared]) \
                   .dropDuplicates()
-        lm_col, rm_col = self._uniq("__mml"), self._uniq("__mmr")
-        # same piece-fan-out reuse rationale as _compat_union_join
-        lt = left.withColumn(lm_col, self._bound_mask(left, compat)) \
-                 .localCheckpoint(eager=False)
-        rt = r2.withColumn(
-            rm_col, self._bound_mask(r2, [v + suffix for v in compat])) \
-            .localCheckpoint(eager=False)
-        r_masks = self._side_masks(rt, rm_col, k)
         out: Optional[DataFrame] = None
-        for lm in self._side_masks(lt, lm_col, k):
-            lp = lt.filter(F.col(lm_col) == lm).drop(lm_col)
-            for rm in r_masks:
-                keys = always + [v for i, v in enumerate(compat)
-                                 if (lm >> i) & 1 and (rm >> i) & 1]
-                if not [v for v in keys if v not in corr]:
+        for lp, rights in self._mask_pieces(left, r2, compat, always, suffix):
+            for rp, keys in rights:
+                if all(v in corr for v in keys):
                     # no NON-injected var bound on both ⇒ no domain
                     # overlap (corr vars are §8.1.4 constants) ⇒ this
                     # piece removes nothing
                     continue
-                rp = (rt.filter(F.col(rm_col) == rm)
-                      .select(*[F.col(v + suffix) for v in keys])
-                      .dropDuplicates())
-                cond = F.lit(True)
-                for v in keys:
-                    cond = cond & (lp[v] == rp[v + suffix])
-                lp = lp.join(rp, cond, "left_anti")
+                rp = rp.select(*[F.col(v + suffix) for v in keys]) \
+                       .dropDuplicates()
+                lp = lp.join(rp, _key_eq(lp, rp, keys, suffix), "left_anti")
             out = lp if out is None else out.unionByName(lp)
         if out is None:
             # dynamic mask enumeration (k > COMPAT_STATIC_MAX_VARS) over
             # an EMPTY left side yields no pieces at all — the MINUS of
             # an empty multiset is empty, not a None frame (r7 fuzz-soak
             # fix: returned None and crashed the projection)
-            return lt.filter(F.lit(False)).drop(lm_col)
-        out = out.drop(lm_col) if lm_col in out.columns else out
+            return left.filter(F.lit(False))
         # same piece-union collapse rationale as _compat_union_join (r8)
-        return out if k <= 1 else self._collapse_union(out)
+        return out if len(compat) <= 1 else self._collapse_union(out)
 
     # ------------------------------------------------------------ scans
 
@@ -1252,10 +1238,8 @@ class Translator:
             elif shared:
                 rightd = (right.select([F.col(v).alias(v + flag) for v in shared])
                           .dropDuplicates().withColumn(flag, F.lit(True)))
-                cond = F.lit(True)
-                for v in shared:
-                    cond = cond & (df[v] == rightd[v + flag])
-                df = df.join(rightd, cond, "left_outer").drop(*[v + flag for v in shared])
+                df = df.join(rightd, _key_eq(df, rightd, shared, flag),
+                             "left_outer").drop(*[v + flag for v in shared])
             else:
                 rightd = right.limit(1).select(F.lit(True).alias(flag))
                 df = df.join(F.broadcast(rightd), F.lit(True), "left_outer")
@@ -1272,10 +1256,9 @@ class Translator:
         (§8.1.1 — unbound matches anything). Strict equality made the flag
         always-false for rows with an unbound shared var (r8 ADVICE fix).
 
-        Same boundness-mask decomposition as :meth:`_minus_mask_anti`, but
-        as a SEMI join per (left-mask, right-mask) piece over a row id so
-        every piece stays a hash join; the matched ids re-attach the flag
-        with one equi join."""
+        Over the :meth:`_mask_pieces` fan-out, as a SEMI join per
+        (left-mask, right-mask) piece over a row id so every piece stays a
+        hash join; the matched ids re-attach the flag with one equi join."""
         strict = [v for v in shared if v not in compat]
         rid = self._uniq("__exid")
         suffix = self._uniq("__EX")
@@ -1284,28 +1267,14 @@ class Translator:
         keyed = df.select(rid, *shared)
         r2 = right.select(*[F.col(v).alias(v + suffix) for v in shared]) \
                   .dropDuplicates()
-        k = len(compat)
-        lm_col, rm_col = self._uniq("__xml"), self._uniq("__xmr")
-        lt = keyed.withColumn(lm_col, self._bound_mask(keyed, compat)) \
-                  .localCheckpoint(eager=False)
-        rt = r2.withColumn(
-            rm_col, self._bound_mask(r2, [v + suffix for v in compat])) \
-            .localCheckpoint(eager=False)
-        r_masks = self._side_masks(rt, rm_col, k)
         matched: Optional[DataFrame] = None
-        for lm in self._side_masks(lt, lm_col, k):
-            lp = lt.filter(F.col(lm_col) == lm).drop(lm_col)
-            for rm in r_masks:
-                keys = strict + [v for i, v in enumerate(compat)
-                                 if (lm >> i) & 1 and (rm >> i) & 1]
-                rp = rt.filter(F.col(rm_col) == rm)
+        for lp, rights in self._mask_pieces(keyed, r2, compat, strict, suffix):
+            for rp, keys in rights:
                 if keys:
                     rp = (rp.select(*[F.col(v + suffix) for v in keys])
                           .dropDuplicates())
-                    cond = F.lit(True)
-                    for v in keys:
-                        cond = cond & (lp[v] == rp[v + suffix])
-                    piece = lp.join(rp, cond, "left_semi")
+                    piece = lp.join(rp, _key_eq(lp, rp, keys, suffix),
+                                    "left_semi")
                 else:
                     # nothing bound on both sides in this piece: every μ′
                     # is compatible — flag true iff the piece is non-empty
@@ -1894,26 +1863,8 @@ def _expr_vars(e, include_agg: bool = False) -> set[str]:
     EExists patterns are excluded (resolved via flag joins); EAgg bodies are
     excluded by default (aggregate outputs are built pre-materialized)."""
     out: set[str] = set()
-
-    def walk(x):
-        if isinstance(x, A.EVar):
-            out.add(x.name)
-        elif isinstance(x, A.EBinary):
-            walk(x.left)
-            walk(x.right)
-        elif isinstance(x, A.EUnary):
-            walk(x.expr)
-        elif isinstance(x, A.EFunc):
-            for a in x.args:
-                walk(a)
-        elif isinstance(x, A.EIn):
-            walk(x.expr)
-            for a in x.items:
-                walk(a)
-        elif isinstance(x, A.EAgg) and include_agg and x.expr is not None:
-            walk(x.expr)
-
-    walk(e)
+    _walk_expr(e, lambda x: out.add(x.name) if isinstance(x, A.EVar)
+               else None, include_agg)
     return out
 
 
@@ -1946,34 +1897,21 @@ def collect_const_terms(q) -> set[str]:
         _walk_expr(e, lambda x: walk(x.pattern) if isinstance(x, A.EExists) else None)
 
     def walk(node):
-        if node is None:
-            return
         if isinstance(node, A.BGP):
             for tp in node.triples:
                 add_term(tp.s)
-                if isinstance(tp.p, A.Var):
-                    pass
-                else:
+                if not isinstance(tp.p, A.Var):
                     walk_path(tp.p)
                 add_term(tp.o)
-        elif isinstance(node, (A.Join, A.Union, A.Minus, A.LeftJoin)):
-            walk(node.left)
-            walk(node.right)
-            if isinstance(node, A.LeftJoin) and node.expr is not None:
-                walk_expr(node.expr)
-        elif isinstance(node, A.Filter):
-            walk(node.pattern)
-            walk_expr(node.expr)
-        elif isinstance(node, A.Extend):
-            walk(node.pattern)
-            walk_expr(node.expr)
-        elif isinstance(node, A.GraphPat):
-            if isinstance(node.graph, A.IRI):
-                keys.add(node.graph.value)
-            walk(node.pattern)
+        elif isinstance(node, A.GraphPat) and isinstance(node.graph, A.IRI):
+            keys.add(node.graph.value)
         elif isinstance(node, A.SubSelect):
             walk_query(node.query)
         # ValuesTable: constants stay string-keyed (string-join fallback)
+        for c in _sub_patterns(node).values():
+            walk(c)
+        for e in _own_exprs(node):
+            walk_expr(e)
 
     def walk_query(qq):
         walk(getattr(qq, "pattern", None))
@@ -1997,14 +1935,23 @@ def _fam_tcol(df: DataFrame, name: str, suffix: str = "") -> TCol:
                 ts=df[name + "__ts" + suffix], key=df[name + suffix])
 
 
+def _key_eq(left: DataFrame, right: DataFrame, keys, suffix: str,
+            null_safe: bool = False) -> Column:
+    """Equi-join condition: each key of ``left`` equals its
+    ``suffix``-renamed counterpart in ``right``."""
+    cond = F.lit(True)
+    for v in keys:
+        a, b = left[v], right[v + suffix]
+        cond = cond & (a.eqNullSafe(b) if null_safe else a == b)
+    return cond
+
+
 def _df_resolver(df: DataFrame):
     def resolver(name: str) -> TCol:
         if name not in df.columns:
             # unbound variable: all-null term
             return TCol()
-        return TCol(lex=F.col(name + "__lex"), dt=F.col(name + "__dt"),
-                    lang=F.col(name + "__lang"), num=F.col(name + "__num"),
-                    ts=F.col(name + "__ts"), key=F.col(name))
+        return TCol.from_var(name)
     return resolver
 
 
@@ -2052,6 +1999,26 @@ class _DFLeaf:
         self.df = df
 
 
+def _sub_patterns(n) -> dict:
+    """A pattern node's child patterns by field name. SERVICE groups are
+    opaque remote text; SubSelect, BGP, VALUES and _DFLeaf are leaves."""
+    if isinstance(n, (A.Join, A.Union, A.Minus, A.LeftJoin)):
+        return {"left": n.left, "right": n.right}
+    if isinstance(n, (A.Filter, A.Extend, A.GraphPat)):
+        return {"pattern": n.pattern}
+    return {}
+
+
+def _own_exprs(n) -> tuple:
+    """A pattern node's own expressions: Filter / BIND / LeftJoin
+    conditions."""
+    if isinstance(n, (A.Filter, A.Extend)):
+        return (n.expr,)
+    if isinstance(n, A.LeftJoin) and n.expr is not None:
+        return (n.expr,)
+    return ()
+
+
 def _pattern_scope_vars(p) -> set[str]:
     """Every variable a pattern can bind or reference — triple/path
     positions, VALUES columns, GRAPH vars, BIND targets, Filter/BIND/
@@ -2060,46 +2027,25 @@ def _pattern_scope_vars(p) -> set[str]:
     SERVICE groups are opaque remote text."""
     out: set[str] = set()
 
-    def term(t):
-        if isinstance(t, A.Var):
-            out.add(t.name)
-
-    def expr(e):
-        out.update(_expr_vars(e))
-        _walk_expr(e, lambda x: walk(x.pattern)
-                   if isinstance(x, A.EExists) else None)
-
     def walk(n):
         if isinstance(n, _DFLeaf):
             out.update(var_names(n.df))
         elif isinstance(n, A.BGP):
-            for tp in n.triples:
-                term(tp.s)
-                term(tp.o)
-                if isinstance(tp.p, A.Var):
-                    out.add(tp.p.name)
-        elif isinstance(n, (A.Join, A.Union, A.Minus)):
-            walk(n.left)
-            walk(n.right)
-        elif isinstance(n, A.LeftJoin):
-            walk(n.left)
-            walk(n.right)
-            if n.expr is not None:
-                expr(n.expr)
-        elif isinstance(n, A.Filter):
-            expr(n.expr)
-            walk(n.pattern)
+            out.update(v for tp in n.triples for v in _tp_vars(tp))
         elif isinstance(n, A.Extend):
             out.add(n.var)
-            expr(n.expr)
-            walk(n.pattern)
         elif isinstance(n, A.ValuesTable):
             out.update(n.variables)
-        elif isinstance(n, A.GraphPat):
-            term(n.graph)
-            walk(n.pattern)
+        elif isinstance(n, A.GraphPat) and isinstance(n.graph, A.Var):
+            out.add(n.graph.name)
         elif isinstance(n, A.SubSelect):
             out.update(name for name, _ in n.query.projections)
+        for e in _own_exprs(n):
+            out.update(_expr_vars(e))
+            _walk_expr(e, lambda x: walk(x.pattern)
+                       if isinstance(x, A.EExists) else None)
+        for c in _sub_patterns(n).values():
+            walk(c)
 
     walk(p)
     return out
@@ -2112,28 +2058,13 @@ def _pattern_expr_vars_deep(p) -> set[str]:
     must make visible even when the pattern never binds them."""
     out: set[str] = set()
 
-    def expr(e):
-        out.update(_expr_vars(e))
-        _walk_expr(e, lambda x: out.update(_pattern_scope_vars(x.pattern))
-                   if isinstance(x, A.EExists) else None)
-
     def walk(n):
-        if isinstance(n, (A.Join, A.Union, A.Minus)):
-            walk(n.left)
-            walk(n.right)
-        elif isinstance(n, A.LeftJoin):
-            walk(n.left)
-            walk(n.right)
-            if n.expr is not None:
-                expr(n.expr)
-        elif isinstance(n, A.Filter):
-            expr(n.expr)
-            walk(n.pattern)
-        elif isinstance(n, A.Extend):
-            expr(n.expr)
-            walk(n.pattern)
-        elif isinstance(n, A.GraphPat):
-            walk(n.pattern)
+        for e in _own_exprs(n):
+            out.update(_expr_vars(e))
+            _walk_expr(e, lambda x: out.update(_pattern_scope_vars(x.pattern))
+                       if isinstance(x, A.EExists) else None)
+        for c in _sub_patterns(n).values():
+            walk(c)
 
     walk(p)
     return out
@@ -2150,17 +2081,9 @@ def _pattern_minus_right_vars(p) -> set[str]:
 
     def walk(n):
         if isinstance(n, A.Minus):
-            out.update(v for v in _pattern_scope_vars(n.right))
-            walk(n.left)
-            walk(n.right)
-        elif isinstance(n, (A.Join, A.Union)):
-            walk(n.left)
-            walk(n.right)
-        elif isinstance(n, A.LeftJoin):
-            walk(n.left)
-            walk(n.right)
-        elif isinstance(n, (A.Filter, A.Extend, A.GraphPat)):
-            walk(n.pattern)
+            out.update(_pattern_scope_vars(n.right))
+        for c in _sub_patterns(n).values():
+            walk(c)
 
     walk(p)
     return out
@@ -2171,25 +2094,11 @@ def _inject_correlation(p, leaf: "_DFLeaf"):
     pattern (leaf-level cross/equi joins), so Filter/BIND scopes inside
     the pattern see the correlated variables — the distributed
     equivalent of per-solution substitution."""
-    if isinstance(p, A.Filter):
-        return A.Filter(p.expr, _inject_correlation(p.pattern, leaf))
-    if isinstance(p, A.Extend):
-        return A.Extend(_inject_correlation(p.pattern, leaf), p.var, p.expr)
-    if isinstance(p, A.Join):
-        return A.Join(_inject_correlation(p.left, leaf),
-                      _inject_correlation(p.right, leaf))
-    if isinstance(p, A.LeftJoin):
-        return A.LeftJoin(_inject_correlation(p.left, leaf),
-                          _inject_correlation(p.right, leaf), p.expr)
-    if isinstance(p, A.Union):
-        return A.Union(_inject_correlation(p.left, leaf),
-                       _inject_correlation(p.right, leaf))
-    if isinstance(p, A.Minus):
-        return A.Minus(_inject_correlation(p.left, leaf),
-                       _inject_correlation(p.right, leaf))
-    if isinstance(p, A.GraphPat):
-        return A.GraphPat(p.graph, _inject_correlation(p.pattern, leaf))
-    return A.Join(leaf, p)     # leaves: BGP, VALUES, SubSelect, Service
+    kids = _sub_patterns(p)
+    if not kids:
+        return A.Join(leaf, p)     # leaves: BGP, VALUES, SubSelect, Service
+    return dataclasses.replace(p, **{f: _inject_correlation(c, leaf)
+                                     for f, c in kids.items()})
 
 
 def _expr_has_exists(e) -> bool:
@@ -2199,22 +2108,24 @@ def _expr_has_exists(e) -> bool:
     return bool(found)
 
 
-def _walk_expr(e, fn):
+def _walk_expr(e, fn, agg: bool = True):
+    """Call ``fn`` on every node of an expression tree; ``agg`` descends
+    into aggregate bodies. EExists patterns are not entered."""
     fn(e)
     if isinstance(e, A.EBinary):
-        _walk_expr(e.left, fn)
-        _walk_expr(e.right, fn)
+        _walk_expr(e.left, fn, agg)
+        _walk_expr(e.right, fn, agg)
     elif isinstance(e, A.EUnary):
-        _walk_expr(e.expr, fn)
+        _walk_expr(e.expr, fn, agg)
     elif isinstance(e, A.EFunc):
         for a in e.args:
-            _walk_expr(a, fn)
+            _walk_expr(a, fn, agg)
     elif isinstance(e, A.EIn):
-        _walk_expr(e.expr, fn)
+        _walk_expr(e.expr, fn, agg)
         for a in e.items:
-            _walk_expr(a, fn)
-    elif isinstance(e, A.EAgg) and e.expr is not None:
-        _walk_expr(e.expr, fn)
+            _walk_expr(a, fn, agg)
+    elif isinstance(e, A.EAgg) and agg and e.expr is not None:
+        _walk_expr(e.expr, fn, agg)
 
 
 def finalize(df: DataFrame, spec: dict[str, str]) -> DataFrame:

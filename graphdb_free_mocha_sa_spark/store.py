@@ -507,13 +507,6 @@ class QuadStore:
 
     # -- persistence (the 100 TB layout) ---------------------------------
 
-    def write_parquet(self, path: str):
-        self._df.write.mode("overwrite").partitionBy("g").parquet(path)
-
-    @classmethod
-    def read_parquet(cls, spark: SparkSession, path: str) -> "QuadStore":
-        return cls(spark, spark.read.parquet(path))
-
     def write_bucketed_table(self, name: str, n_buckets: int = 32):
         """The full SURVEY §1.4 catalog layout: parquet **bucketed by ``s``
         and sorted by ``s``** within each bucket. Star-pattern BGPs are s=s
@@ -525,10 +518,6 @@ class QuadStore:
         parquet row-group stats rather than directory partitioning.)"""
         (self._df.write.mode("overwrite").format("parquet")
          .bucketBy(n_buckets, "s").sortBy("s").saveAsTable(name))
-
-    @classmethod
-    def read_table(cls, spark: SparkSession, name: str) -> "QuadStore":
-        return cls(spark, spark.table(name))
 
 
 class _CommitConflict(Exception):
@@ -896,13 +885,7 @@ class DurableQuadStore(QuadStore):
                 shutil.rmtree(os.path.join(self.path, base),
                               ignore_errors=True)
                 self._txn = latest["txn"]
-                self._base = latest.get("base")
-                self._segments = list(latest["segments"])
-                self._version = max(self._version, latest["version"])
-                marks = getattr(self, "_stream_marks", {})
-                for k, v in (latest.get("stream") or {}).items():
-                    marks[k] = max(marks.get(k, -1), v)
-                self._stream_marks = marks
+                self._adopt_winner(latest, [])
                 self._append_segment(delta)
                 return
             df = self._snapshot_df()
@@ -915,6 +898,18 @@ class DurableQuadStore(QuadStore):
             return
         self._append_segment(delta)
 
+    def _adopt_winner(self, latest: dict, own_segments: list) -> None:
+        """Take a concurrent winner's log entry as our state: its base and
+        segments (``own_segments`` stacked on top), the newer version and
+        the higher stream mark per source."""
+        self._base = latest.get("base")
+        self._segments = list(latest["segments"]) + own_segments
+        self._version = max(self._version, latest["version"])
+        marks = getattr(self, "_stream_marks", {})
+        for k, v in (latest.get("stream") or {}).items():
+            marks[k] = max(marks.get(k, -1), v)
+        self._stream_marks = marks
+
     def _append_segment(self, delta: DataFrame):
         seg = self._write_segment(delta)
         if seg is None:
@@ -926,13 +921,7 @@ class DurableQuadStore(QuadStore):
             """Fold a concurrent winner's state under OUR delta segment:
             the append stays valid against any base/segment set."""
             raced.append(True)
-            self._base = latest.get("base")
-            self._segments = list(latest["segments"]) + [seg]
-            self._version = max(self._version, latest["version"])
-            marks = getattr(self, "_stream_marks", {})
-            for k, v in (latest.get("stream") or {}).items():
-                marks[k] = max(marks.get(k, -1), v)
-            self._stream_marks = marks
+            self._adopt_winner(latest, [seg])
 
         self._commit_log(on_conflict=merge_append)
         if raced:

@@ -165,6 +165,29 @@ def test_minus_maybe_unbound_is_hash_anti_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan[:3000]
 
 
+def test_exists_maybe_unbound_is_hash_semi_join(spark):
+    """FILTER EXISTS with a maybe-unbound shared var must run as equi
+    semi-joins over the mask decomposition, not a non-equi join."""
+    from graphdb_free_mocha_sa_spark.engine import Engine
+    from graphdb_free_mocha_sa_spark.store import QuadStore
+    eng = Engine(spark, QuadStore(spark))
+    eng.update("""INSERT DATA {
+        <urn:a> <urn:p> <urn:m1> . <urn:c> <urn:p> <urn:m2> .
+        <urn:b> <urn:q> 1 . <urn:m1> <urn:r> "z" . }""")
+    df = eng.query("""
+        SELECT ?s ?m WHERE {
+          { ?s <urn:p> ?m } UNION { ?s <urn:q> 1 }
+          FILTER EXISTS { ?m <urn:r> ?v }
+        }""").finalize({"s": "str", "m": "str"})
+    rows = sorted(((r[0], r[1]) for r in df.collect()),
+                  key=lambda r: (r[0], r[1] or ""))
+    # (a,m1) has a match; (c,m2) has none; (b,unbound) matches anything
+    # (§8.1: an unbound var stays free in the EXISTS pattern)
+    assert rows == [("urn:a", "urn:m1"), ("urn:b", None)]
+    plan = _plan(df)
+    assert "BroadcastNestedLoopJoin" not in plan, plan[:3000]
+
+
 def test_parquet_scan_prunes_columns_and_pushes_filters(spark):
     df = (spark.read.parquet(os.path.join(SF_DIR, "orders.parquet"))
           .where(F.col("o_totalprice") > 100000)

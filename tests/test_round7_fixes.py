@@ -202,3 +202,29 @@ def test_minus_dynamic_masks_empty_left(fresh_eng):
           { VALUES (?a ?b ?c) { (1 UNDEF 3) (UNDEF 7 UNDEF) } }
         }""", {"a": "num", "b": "num", "c": "num"})
     assert got2 == [(9.0, 9.0, 9.0)]
+
+
+def test_compat_join_dynamic_masks_empty_side(spark):
+    """A join with >2 maybe-unbound shared vars enumerates boundness masks
+    dynamically; an EMPTY side yields no pieces, and the compatibility
+    join indexed the first of none (IndexError, the query answered the
+    failure sentinel). Joining with an empty multiset is empty."""
+    from graphdb_free_mocha_sa_spark.engine import Engine
+    from graphdb_free_mocha_sa_spark.store import DEFAULT_GRAPH, QuadStore
+    rows = [(DEFAULT_GRAPH, s, p, o, None, None, None, None) for s, p, o in (
+        ("urn:s1", "urn:p", "urn:a1"), ("urn:s1", "urn:q", "urn:b1"),
+        ("urn:s2", "urn:r", "urn:c1"), ("urn:s2", "urn:p", "urn:a2"))]
+    eng = Engine(spark, QuadStore(spark, spark.createDataFrame(rows,
+                                                               QUAD_SCHEMA)))
+    union = ("{ ?s <urn:p> ?a } UNION { ?s <urn:q> ?b } "
+             "UNION { ?s <urn:r> ?c }")
+    spec = {v: "iri" for v in "sabc"}
+    got = _rows(eng, "SELECT * WHERE { " + union + " ?a <urn:absent> ?b . "
+                "?b <urn:absent2> ?c . }", spec)
+    assert got == []
+    # the non-empty sibling: an unbound var is compatible with anything
+    got2 = _rows(eng, "SELECT * WHERE { " + union +
+                 " VALUES (?a ?b ?c) { (<urn:a1> UNDEF UNDEF) } }", spec)
+    assert got2 == [("urn:s1", "urn:a1", "urn:b1", None),
+                    ("urn:s1", "urn:a1", None, None),
+                    ("urn:s2", "urn:a1", None, "urn:c1")]

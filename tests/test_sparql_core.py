@@ -403,21 +403,21 @@ def test_sum_avg_poisoned_by_non_numeric_group_value(spark):
 
 
 @pytest.mark.parametrize("force_encode", [False, True])
-def test_paths_under_graph_variable_scoped_per_graph(spark, force_encode,
-                                                     monkeypatch):
+def test_paths_under_graph_variable_scoped_per_graph(spark, force_encode):
     """r6c probe fixes (§18.4): (1) property paths under GRAPH ?g bind ?g
     and the closure NEVER chains across named graphs; (2) GRAPH ?g ranges
     over named graphs only (no default-sentinel leak); (3) zero-length
     nullable paths with one constant endpoint bind the variable to the
     constant even when the term is absent from the graph/dictionary —
-    per named graph under GRAPH ?g."""
+    per named graph under GRAPH ?g. Run on the string path and, with the
+    small-store cutoff lifted, on the dictionary-encoded path."""
     import json
 
     from graphdb_free_mocha_sa_spark.engine import Engine
     from graphdb_free_mocha_sa_spark.store import QuadStore
-    if force_encode:
-        monkeypatch.setenv("SPARK_GRAFT_FORCE_ENCODE", "1")
     eng = Engine(spark, QuadStore(spark))
+    if force_encode:
+        eng.ENCODE_MIN_QUADS = 0
     eng.update("""INSERT DATA {
       GRAPH <urn:g1> { <urn:a> <urn:p> <urn:b> . <urn:b> <urn:p> <urn:c> }
       GRAPH <urn:g2> { <urn:c> <urn:p> <urn:d> }
@@ -454,6 +454,8 @@ def test_paths_under_graph_variable_scoped_per_graph(spark, force_encode,
     assert rows('SELECT ?g ?o WHERE '
                 '{ GRAPH ?g { <urn:a> (<urn:p>/<urn:p>) ?o } }') \
         == [("urn:g1", "urn:c")]
+    # the encoded case really ran on the dictionary-encoded state
+    assert (eng._enc is not None) == force_encode
 
 
 def test_r6c_ebv_and_term_function_guards(spark):
