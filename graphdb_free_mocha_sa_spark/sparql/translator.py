@@ -310,7 +310,7 @@ class Translator:
         else:
             # OPTIONAL over maybe-unbound vars: unbound or equal; the
             # always-bound keys stay equi-join keys
-            loose = sorted(compat) if how != "left_anti" else []
+            loose = sorted(compat)
             cond = _key_eq(left, r2, [v for v in shared if v not in loose],
                            suffix, null_safe=how == "left_anti")
             for v in loose:

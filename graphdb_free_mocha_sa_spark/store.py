@@ -886,11 +886,10 @@ class DurableQuadStore(QuadStore):
                               ignore_errors=True)
                 self._txn = latest["txn"]
                 self._adopt_winner(latest, [])
+                self._reload_df()      # the delta stacks on the winner's rows
                 self._append_segment(delta)
                 return
-            df = self._snapshot_df()
-            self._df = df if df is not None \
-                else self.spark.createDataFrame([], QUAD_SCHEMA)
+            self._reload_df()
             return
         if len(self._segments) >= self.SEGMENT_COMPACT_THRESHOLD:
             # compaction: fold base + segments + delta into a fresh base
@@ -910,6 +909,12 @@ class DurableQuadStore(QuadStore):
             marks[k] = max(marks.get(k, -1), v)
         self._stream_marks = marks
 
+    def _reload_df(self) -> None:
+        """Point the live snapshot at the current base and segments."""
+        df = self._snapshot_df()
+        self._df = df if df is not None \
+            else self.spark.createDataFrame([], QUAD_SCHEMA)
+
     def _append_segment(self, delta: DataFrame):
         seg = self._write_segment(delta)
         if seg is None:
@@ -925,9 +930,7 @@ class DurableQuadStore(QuadStore):
 
         self._commit_log(on_conflict=merge_append)
         if raced:
-            df = self._snapshot_df()   # base/segments changed underneath
-            self._df = df if df is not None \
-                else self.spark.createDataFrame([], QUAD_SCHEMA)
+            self._reload_df()          # base/segments changed underneath
         else:
             self._df = self._df.unionByName(
                 self._read_segments([seg]))
@@ -954,9 +957,7 @@ class DurableQuadStore(QuadStore):
         self._base = self._write_base(new_df)
         self._segments = []
         self._commit_log()
-        df = self._snapshot_df()
-        self._df = df if df is not None \
-            else self.spark.createDataFrame([], QUAD_SCHEMA)
+        self._reload_df()
 
     def vacuum(self, min_age_seconds: float = 0.0) -> int:
         """Delete bases/segments no longer referenced by the latest log

@@ -203,6 +203,45 @@ def test_durable_append_compaction(spark, tmp_path):
     assert len(st._segments) <= 4
 
 
+def test_durable_lost_init_race_adopts_winner(spark, tmp_path):
+    """Two writers open the same empty store. The second's first write
+    loses the race for txn 1: its own base is discarded and its delta lands
+    as one segment on the winner's base, under the winner's version and the
+    higher stream mark per source."""
+    from graphdb_free_mocha_sa_spark.model import QUAD_SCHEMA
+    from graphdb_free_mocha_sa_spark.store import DurableQuadStore
+    path = str(tmp_path / "dstore")
+
+    def quads(s):
+        return spark.createDataFrame(
+            [(None, s, "urn:p", "o", None, None, None, None)], QUAD_SCHEMA)
+
+    winner = DurableQuadStore(spark, path)
+    loser = DurableQuadStore(spark, path)      # opened empty, before the win
+    winner.stage_stream_mark("a", 5)
+    winner.load_version(quads("urn:w"))        # txn 1: base, version 1
+    winner.stage_stream_mark("b", 1)
+    winner.flush_stream_mark()                 # txn 2: log only
+    loser.stage_stream_mark("a", 7)
+    loser.add_quads(quads("urn:l"))            # loses txn 1, commits txn 3
+
+    assert loser._base == winner._base
+    assert len(loser._segments) == 1
+    assert loser.version == 1
+    assert (loser.stream_last("a"), loser.stream_last("b")) == (7, 1)
+    assert loser._txn == 3
+    assert sorted(r.s for r in loser.df.collect()) == ["urn:l", "urn:w"]
+    data_dirs = {n for n in os.listdir(path) if n != "_log"}
+    assert data_dirs == {winner._base, loser._segments[0]}
+
+    reopened = DurableQuadStore(spark, path)
+    assert (reopened._base, reopened._segments) == (loser._base,
+                                                    loser._segments)
+    assert reopened.version == 1
+    assert (reopened.stream_last("a"), reopened.stream_last("b")) == (7, 1)
+    assert reopened.df.count() == 2
+
+
 def test_salted_join_equals_plain_join(spark, tables):
     from graphdb_free_mocha_sa_spark.operators.skew import salted_join
     li = tables["lineitem"].select("l_orderkey", "l_quantity")
